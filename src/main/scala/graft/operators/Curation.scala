@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.CacheScope
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -440,16 +440,13 @@ object Curation {
     * per-token mean, length-debiased) is the selection key a real run
     * thresholds.
     *
-    * Scale shape: pass 1 trains the feature table — one partial-agg
-    * exchange that collapses to 256 rows no matter the corpus size
-    * (both distributions counted in the same pass). Pass 2 re-scans,
-    * broadcast-joins the 256-row table, and partial-aggs per doc. Two
-    * corpus scans and no big shuffle except the doc_id agg — the same
-    * train-then-score shape DSIR ships for exactly this reason. */
+    * Scale shape: pass 1 is the shared vocabulary aggregation
+    * ([[vocabOf]]), whose ratio table reaches the driver in one
+    * ≤257-row collect (256 DSIR bucket rows plus the empty token). Pass
+    * 2 is one narrow per-row projection reading that table as a
+    * 256-element literal array — no explode, no join, no exchange. */
   def dsirWeights(s: SparkSession, d: String): DataFrame =
-    dsirWeightsWithSource(s, d)
-      .select(col("doc_id"), col("n_tokens"), col("weight"), col("avg_weight_q6"))
-      .orderBy(col("doc_id"))
+    dsirWeightsWithSource(s, d).drop("source").orderBy(col("doc_id"))
 
   /** The per-bucket q6 ratio over `tc`/`rc` count columns, shared with
     * the overflow property suite. DECIMAL numerator: in pure Long
@@ -462,26 +459,63 @@ object Curation {
   private[graft] def dsirRatioQ6Expr =
     expr("(cast(1000000 as decimal(20,0)) * (tc + 1)) DIV (rc + 1)")
 
-  /** [[dsirWeights]] core, keeping `source` in flight (doc_id is unique,
-    * so grouping on both adds no exchange) for [[dsirSelect]]'s report. */
+  /** DSIR's feature bucket of one lowercased token. */
+  private def dsirBucket(w: Column): Column =
+    conv(substring(md5(w), 1, 6), 16, 10).cast("long") % 256
+
+  private case class Vocab(counts: DataFrame, pt: Long, nt: Long, ratioQ6: Array[Long])
+
+  /** The corpus vocabulary, counted ONCE for the classifier and DSIR:
+    * `counts(token, tot, pc, nc)` over the raw `split(text, ' ')` stream
+    * (persisted: the vote takes re-read it), then one ≤257-row collect
+    * of the class totals `(pt, nt)` and DSIR's `ratioQ6`. DSIR's
+    * `split(lower(text), ' ')` stream is the raw stream mapped through
+    * `lower` (lowercasing never makes or removes a space, and a space
+    * ends every case context, word-final Σ included), so `rc(b) = Σ tot`
+    * and `tc(b) = Σ pc` over the tokens whose non-empty `lower(token)`
+    * hashes to b — exact integers. The empty token feeds only the
+    * totals (null group). */
+  private def vocabOf(docs: DataFrame): Vocab = {
+    val counts = CacheScope.track(docs
+      .select(col("source"), explode(split(col("text"), " ")).as("token"))
+      .groupBy(col("token"))
+      .agg(count(lit(1)).as("tot"), sum(when(col("source").isin("src1", "src2", "src3"), 1L)
+        .otherwise(0L)).as("pc"))
+      .withColumn("nc", col("tot") - col("pc"))
+      .persist())
+    val low = lower(col("token"))
+    val rows = counts
+      .groupBy(when(low =!= "", dsirBucket(low)).as("b"))
+      .agg(sum(col("tot")).as("rc"), sum(col("pc")).as("tc"))
+      .select(col("b"), col("rc"), col("tc"), dsirRatioQ6Expr.as("r_q6"))
+      .collect()
+    val ratioQ6 = new Array[Long](256)
+    rows.filterNot(_.isNullAt(0)).foreach(r => ratioQ6(r.getLong(0).toInt) = r.getLong(3))
+    Vocab(counts, rows.map(_.getLong(2)).sum,
+      rows.map(r => r.getLong(1) - r.getLong(2)).sum, ratioQ6)
+  }
+
+  /** Per-row DSIR columns `n_tokens` and `weight` over `text`. */
+  private def dsirCols(ratioQ6: Array[Long]): Seq[(String, Column)] = {
+    val ws = filter(split(lower(col("text")), " "), _ =!= "")
+    val r = typedLit(ratioQ6.toSeq)
+    Seq("n_tokens" -> size(ws).cast("long"),
+      "weight" -> aggregate(ws, lit(0L),
+        (acc, w) => acc + element_at(r, dsirBucket(w).cast("int") + 1)))
+  }
+
+  /** Length-debiased weight; null for a doc with no non-empty token. */
+  private def avgWeightQ6 = when(col("n_tokens") > 0, expr("weight DIV n_tokens"))
+
+  /** [[dsirWeights]] core, keeping `source` for [[dsirSelect]]; a doc
+    * whose lowercased tokens are all empty has no row. */
   private def dsirWeightsWithSource(s: SparkSession, d: String): DataFrame = {
-    def feat = graft.Tables.widen(documents(s, d))
-      .select(col("doc_id"), col("source"),
-        explode(expr("filter(split(lower(text), ' '), t -> t != '')")).as("w"))
-      .select(col("doc_id"), col("source"),
-        (conv(substring(md5(col("w")), 1, 6), 16, 10).cast("long") % 256).as("b"))
-    val ratio = feat
-      .groupBy(col("b"))
-      .agg(count(lit(1)).as("rc"),
-        sum(when(col("source").isin("src1", "src2", "src3"), 1L)
-          .otherwise(0L)).as("tc"))
-      .select(col("b"), dsirRatioQ6Expr.as("r_q6"))
-    feat
-      .join(broadcast(ratio), "b")
-      .groupBy(col("doc_id"), col("source"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("r_q6")).as("weight"))
+    val docs = documents(s, d)
+    graft.Tables.widen(docs)
+      .withColumns(dsirCols(vocabOf(docs).ratioQ6).toMap)
+      .filter(col("n_tokens") > 0)
       .select(col("doc_id"), col("source"), col("n_tokens"), col("weight"),
-        expr("weight DIV n_tokens").as("avg_weight_q6"))
+        avgWeightQ6.as("avg_weight_q6"))
   }
 
   /** DSIR SELECTION — the resampling half: keep the global top
@@ -490,60 +524,51 @@ object Curation {
     * diagnostic: target-matched sources (src1–src3) should be enriched
     * well past 25%, the rest starved — domain shift made visible per
     * domain, which is what an operator watches before committing a mix.
-    *
-    * Scale shape: the naive form is `row_number()` over one GLOBAL
-    * order. Instead the [[tokenBudgetFrom]] two-phase trick, count
-    * flavor: coarse-bucket by `avg_weight_q6 DIV 1024` (monotone in the
-    * sort key), prefix-count the tiny bucket table (the only
-    * whole-frame window runs over buckets, not docs), broadcast it
-    * back — buckets wholly inside the quota keep map-side, wholly
-    * outside drop map-side, and only the straddle bucket pays an exact
-    * within-bucket window. Counts are integers, so the split is
-    * bit-exact against the oracle's single global window. */
+    * Scale shape: [[dsirSelectFrom]]. */
   def dsirSelect(s: SparkSession, d: String): DataFrame =
     dsirSelectFrom(dsirWeightsWithSource(s, d))
 
   /** Frame core behind [[dsirSelect]]: any `(doc_id, source,
     * avg_weight_q6)` frame — the unit the property suite drives with
     * adversarial weights (all-tied mass in one straddle bucket,
-    * bucket-boundary values, quota edges at tiny n). Spark's `DIV`
-    * truncates toward zero, which is still monotone non-decreasing in
-    * the weight, so the bucket-DESC prefix agrees with the global
-    * (weight DESC, doc_id) order restricted to whole buckets for ANY
-    * integer weights, negatives included. */
-  private[graft] def dsirSelectFrom(weights: DataFrame): DataFrame = {
-    val docs = CacheScope.track(
-      weights
-        .withColumn("bucket", expr("avg_weight_q6 DIV 1024"))
-        .persist())
-    // global window over the BUCKET table only: avg_weight_q6 ≤ 1e6
-    // (tc ≤ rc per bucket), so bucket = w DIV 1024 spans ≤978 values —
-    // ≤978 rows through one partition, never the corpus
-    // (PlanHygieneSpec allowlists exactly this bounded shape)
-    val buckets = docs.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bcnt"))
-      .withColumn("before_b", coalesce(
-        sum(col("bcnt")).over(Window.orderBy(col("bucket").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("quota", expr(
-        "(sum(bcnt) OVER (ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) + 3) DIV 4"))
-    val tagged = docs.join(broadcast(buckets), "bucket")
-    val fullKeep = tagged.filter(col("before_b") + col("bcnt") <= col("quota"))
-    val straddle = tagged
-      .filter(col("before_b") < col("quota") &&
-        col("before_b") + col("bcnt") > col("quota"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("bucket"))
-          .orderBy(col("avg_weight_q6").desc, col("doc_id"))))
-      .filter(col("before_b") + col("rn") <= col("quota"))
-    val kept = fullKeep.select(col("doc_id"))
-      .unionByName(straddle.select(col("doc_id")))
-      .withColumn("kept", lit(true))
-    docs.join(kept, Seq("doc_id"), "left")
+    * bucket-boundary values, quota edges at tiny n).
+    *
+    * Scale shape: the naive form is `row_number()` over one GLOBAL
+    * order. Instead coarse-bucket by `avg_weight_q6 DIV 1024` and
+    * collect the bucket counts — ≤978 weight buckets for DSIR weights
+    * (`avg_weight_q6` ≤ 1e6 as tc ≤ rc). The driver sets the quota and
+    * decides per bucket: wholly inside keeps map-side, wholly outside
+    * drops map-side, and only the straddle bucket pays a `row_number`
+    * window. No global window, no join back to the docs. `DIV`
+    * truncates toward zero, still monotone non-decreasing in the
+    * weight, so the bucket-DESC prefix agrees with the global (weight
+    * DESC, doc_id) order for ANY integer weights, negatives included. */
+  private[graft] def dsirSelectFrom(weights: DataFrame): DataFrame =
+    dsirKeep(weights.select(col("doc_id"), col("source"), col("avg_weight_q6")), lit(true))
       .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
+      .agg(count(lit(1)).as("n_docs"), sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
       .orderBy(col("source"))
+
+  /** `rows` plus `kept`: the top ceil(n/4) of the `pool` rows by
+    * (avg_weight_q6 DESC, doc_id). Persisted: the bucket collect and the
+    * returned plan both read it. */
+  private def dsirKeep(rows: DataFrame, pool: Column): DataFrame = {
+    val docs = CacheScope.track(rows.withColumn("in_pool", pool)
+      .withColumn("bucket", expr("avg_weight_q6 DIV 1024")).persist())
+    val buckets = docs.filter(col("in_pool")).groupBy(col("bucket")).count()
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._1)
+    val quota = (buckets.map(_._2).sum + 3) / 4
+    val before = buckets.scanLeft(0L)(_ + _._2)
+    // the first bucket (weight-descending) the quota cannot hold whole:
+    // every bucket above it is kept, its top `need` docs, nothing below
+    val (cut, need) = buckets.indices.find(i => before(i) + buckets(i)._2 > quota)
+      .map(i => (buckets(i)._1, quota - before(i))).getOrElse((Long.MinValue, 0L))
+    val above = docs.withColumn("kept", col("in_pool") && col("bucket") > cut)
+    val inCut = col("in_pool") && col("bucket") === cut
+    if (need == 0) above
+    else above.filter(!inCut).unionByName(docs.filter(inCut)
+      .withColumn("kept", row_number().over(Window.partitionBy(col("bucket"))
+        .orderBy(col("avg_weight_q6").desc, col("doc_id"))) <= need))
   }
 
   /** Discriminative-token quality classifier — the odds-ratio core of
@@ -567,14 +592,23 @@ object Curation {
     * so one spammy repetition can't flip a doc); `predicted` is
     * score > 0, ties conservatively negative.
     *
-    * Scale shape: the vocab table is COUNT-AGGREGATED before anything
-    * global happens, so the only window runs over vocab-sized data
-    * (31 tokens here; ~10⁵ for a BPE vocab — still one executor's
-    * lunch), and the scoring join broadcasts the ±1 vocab. The
-    * corpus-side work is two token-stream aggs and one broadcast
-    * join — no corpus-sized shuffle beyond the per-doc groupBy, which
-    * partial-aggregates map-side. `spark.graft.classifier.vocabK`
-    * (default 8, oracle-pinned) is the feature-budget dial. */
+    * Scale shape: the vocab is COUNT-AGGREGATED once ([[vocabOf]]), the
+    * only corpus-sized exchange. The driver collects the class totals
+    * with DSIR's bucket table (≤257 rows) and the first and last K of
+    * the ranking as two `orderBy(...).limit(K)` takes (≤2K vote tokens).
+    * Scoring is one narrow per-row projection with the vote tokens as
+    * an IN-set literal: no explode, no join, no exchange.
+    * `spark.graft.classifier.vocabK` (default 8, oracle-pinned) is the
+    * feature-budget dial. */
+  def qualityClassifier(s: SparkSession, d: String): DataFrame = {
+    val docs = documents(s, d)
+    val (pos, neg) = voteTokens(vocabOf(docs), s)
+    docs.select(col("doc_id") +: voteCols(pos, neg).map { case (n, c) => c.as(n) }: _*)
+      .withColumn("score", col("votes_pos") - col("votes_neg"))
+      .withColumn("predicted", col("score") > 0)
+      .orderBy(col("doc_id"))
+  }
+
   /** The per-token odds-ratio weight over `pc`/`nc` count columns with
     * the (pt, nt) class totals as literals — shared with the overflow
     * property suite. DECIMAL numerator AND denominator: 1e6·(pc+1)·(nt+1)
@@ -588,58 +622,24 @@ object Curation {
     expr(s"(cast(1000000 as decimal(20,0)) * (pc + 1) * (${nt}L + 1)) DIV " +
       s"(cast(nc + 1 as decimal(20,0)) * (${pt}L + 1))")
 
-  def qualityClassifier(s: SparkSession, d: String): DataFrame = {
+  /** The (+1, −1) vote tokens: the first and the last K of the single
+    * (w_q6 DESC, token) ranking; a token in both cancels. */
+  private def voteTokens(v: Vocab, s: SparkSession): (Seq[String], Seq[String]) = {
     val k = graft.GraftConf.int(s, "spark.graft.classifier.vocabK", 8)
     require(k >= 1, "spark.graft.classifier.vocabK must be >= 1")
-    val toks = documents(s, d).select(col("doc_id"), col("source"),
-      explode(split(col("text"), " ")).as("token"))
-    // vocab-sized after the agg; persisted because both the totals
-    // prelude and the ranking read it (one corpus pass, not two)
-    val counts = CacheScope.track(toks.groupBy(col("token"))
-      .agg(count(lit(1)).as("tot"),
-        sum(when(col("source").isin("src1", "src2", "src3"), 1L)
-          .otherwise(0L)).as("pc"))
-      .withColumn("nc", col("tot") - col("pc"))
-      .persist())
-    // scalar prelude (the pagerank |V|/dangling idiom): the two class
-    // totals come to the driver as one row and return as literals — a
-    // one-row broadcast join would plan a nested-loop
-    val totalsRow = counts.agg(sum(col("pc")).as("pt"), sum(col("nc")).as("nt"))
-      .collect()(0)
-    val (pt, nt) = (totalsRow.getLong(0), totalsRow.getLong(1))
-    // the two global windows below rank the VOCAB table (one row per
-    // distinct token — ~1e5 for a BPE vocab), never the corpus
-    // (PlanHygieneSpec allowlists exactly this bounded shape)
-    val vocab = counts
-      .withColumn("w_q6", classifierWq6Expr(pt, nt))
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("w_q6").desc, col("token"))))
-      .withColumn("v", count(lit(1)).over(Window.partitionBy()))
-      .select(col("token"),
-        (when(col("rk") <= k, 1).otherwise(0)
-          + when(col("rk") > col("v") - k, -1).otherwise(0)).as("vote"))
-      .filter(col("vote") =!= 0)
-    // vocab join BEFORE the distinct (guide §2.3 — filter before the
-    // exchange): only the ±2K voting tokens matter, so the broadcast
-    // semi-prunes the token stream first and the distinct's exchange
-    // carries vocab-matched pairs instead of every (doc, token) pair —
-    // at a real 10⁵-token vocab that is a ~10⁴× cut of this exchange.
-    // vote is a function of token, so distinct on (doc, token, vote)
-    // equals the old distinct-then-join row set exactly.
-    val scores = toks.select(col("doc_id"), col("token"))
-      .join(broadcast(vocab), "token")
-      .select(col("doc_id"), col("token"), col("vote")).distinct()
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("vote") > 0, 1L).otherwise(0L)).as("votes_pos"),
-        sum(when(col("vote") < 0, 1L).otherwise(0L)).as("votes_neg"))
-    documents(s, d).select(col("doc_id"))
-      .join(scores, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("votes_pos"), lit(0L)).as("votes_pos"),
-        coalesce(col("votes_neg"), lit(0L)).as("votes_neg"))
-      .withColumn("score", col("votes_pos") - col("votes_neg"))
-      .withColumn("predicted", col("score") > 0)
-      .orderBy(col("doc_id"))
+    val ranked = v.counts.select(col("token"), classifierWq6Expr(v.pt, v.nt).as("w_q6"))
+    def take(order: Column*) =
+      ranked.orderBy(order: _*).limit(k).collect().map(_.getString(0)).toSeq
+    val top = take(col("w_q6").desc, col("token"))
+    val bottom = take(col("w_q6").asc, col("token").desc)
+    (top.diff(bottom), bottom.diff(top))
+  }
+
+  /** Per-row presence votes `votes_pos`/`votes_neg` over `text`. */
+  private def voteCols(pos: Seq[String], neg: Seq[String]): Seq[(String, Column)] = {
+    def votes(vs: Seq[String]) =
+      size(array_distinct(filter(split(col("text"), " "), _.isin(vs: _*)))).cast("long")
+    Seq("votes_pos" -> votes(pos), "votes_neg" -> votes(neg))
   }
 
   /** THE COMPOSED CURATION PIPELINE — the end-to-end flow a
@@ -648,38 +648,37 @@ object Curation {
     * the exact expressions `q_filter_funnel` audits) gates into the
     * odds-ratio classifier vote ([[qualityClassifier]]), and the
     * surviving docs enter DSIR top-quartile selection
-    * ([[dsirSelectFrom]] over [[dsirWeightsWithSource]], the same
-    * two-phase bucket prefix machinery `q_dsir_select` gates). Output
-    * is the per-source monitoring table: how many docs, how many past
-    * the filters, how many also classifier-positive, and how many the
-    * importance-weighted quota finally kept.
+    * ([[dsirSelectFrom]]'s bucket split over [[dsirWeights]]' scores).
+    * Output is the per-source monitoring table: how many docs, how many
+    * past the filters, how many also classifier-positive, and how many
+    * the importance-weighted quota finally kept.
     *
-    * Every stage REUSES its home operator's code — nothing is
-    * re-derived here, so the composite cannot drift from the pieces
-    * the gate already checks one by one (the funnel's shared-verbatim
-    * discipline, extended to the whole pipeline). Scale shape is the
-    * union of its parts: per-row battery + one LM join, broadcast
-    * classifier vocab, and the only global window still runs over
-    * BUCKETS, not docs. */
+    * Every stage REUSES its home operator's code, so the composite
+    * cannot drift from the pieces the gate checks one by one.
+    *
+    * Scale shape: one vocabulary aggregation serves the classifier and
+    * DSIR. The driver collects the class totals with the DSIR bucket
+    * table (≤257 DSIR bucket rows), the ±K vote tokens (≤2K vote
+    * tokens) and the selection's bucket counts (≤978 weight buckets).
+    * One narrow per-row pass computes the funnel battery, the votes,
+    * `n_tokens`, `weight` and `avg_weight_q6`; the LM rare-trigram join
+    * is the only other corpus-sized exchange. */
   def curationPipeline(s: SparkSession, d: String): DataFrame = {
-    val flags = TextAnalysis.funnelFlags(s, d)
-      .select(col("doc_id"), col("source"),
-        (col("first_fail") === "pass").as("f_pass"))
-    val cls = qualityClassifier(s, d).select(col("doc_id"), col("predicted"))
-    val elig = CacheScope.track(flags.join(cls, "doc_id")
-      .withColumn("eligible", col("f_pass") && col("predicted"))
-      .persist())
-    val kept = dsirSelectFrom(
-      dsirWeightsWithSource(s, d)
-        .join(elig.filter(col("eligible")).select(col("doc_id")), "doc_id"))
-      .select(col("source"), col("n_kept"))
-    elig.groupBy(col("source"))
+    val docs = documents(s, d)
+    val vocab = vocabOf(docs)
+    val (pos, neg) = voteTokens(vocab, s)
+    val rows = TextAnalysis.funnelFlags(graft.Tables.widen(docs),
+        voteCols(pos, neg) ++ dsirCols(vocab.ratioQ6))
+      .select(col("doc_id"), col("source"), col("n_tokens"),
+        avgWeightQ6.as("avg_weight_q6"),
+        (col("first_fail") === "pass").as("f_pass"),
+        (col("first_fail") === "pass" && col("votes_pos") > col("votes_neg")).as("eligible"))
+    dsirKeep(rows, col("eligible") && col("n_tokens") > 0)
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("f_pass"), 1L).otherwise(0L)).as("n_filter_pass"),
-        sum(when(col("eligible"), 1L).otherwise(0L)).as("n_eligible"))
-      .join(kept, Seq("source"), "left")
-      .select(col("source"), col("n_docs"), col("n_filter_pass"),
-        col("n_eligible"), coalesce(col("n_kept"), lit(0L)).as("n_kept"))
+        sum(when(col("eligible"), 1L).otherwise(0L)).as("n_eligible"),
+        sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
       .orderBy(col("source"))
   }
 
@@ -802,7 +801,7 @@ object Curation {
 
     // the composed pipeline: funnel verdicts ∧ classifier vote gate the
     // DSIR top-quartile selection; single global window — semantically
-    // the engine's two-phase bucket prefix count over eligible docs
+    // the engine's driver-decided bucket split over eligible docs
     "q_curation_pipeline" ->
       s"""WITH ${graft.operators.TextAnalysis.funnelPassCteSql},
         |$classifierCteSql,
@@ -992,7 +991,7 @@ object Curation {
         |FROM w ORDER BY doc_id""".stripMargin,
 
     // single global window — semantically what the engine's two-phase
-    // bucket prefix count computes distributed
+    // bucket split computes distributed
     "q_dsir_select" ->
       s"""WITH $dsirCteSql,
         |r AS (

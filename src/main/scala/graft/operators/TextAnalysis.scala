@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -1109,9 +1109,13 @@ object TextAnalysis {
     * real run sets the threshold as a support quantile (e.g. "bottom
     * 0.1% of positions"), where the CMS error is relatively negligible.
     * The conf keeps that a session decision instead of an edit. */
-  def lmRareTrigram(s: SparkSession, d: String): DataFrame = {
+  def lmRareTrigram(s: SparkSession, d: String): DataFrame = lmRareTrigramOf(docsW(s, d))
+
+  /** [[lmRareTrigram]] over any `(doc_id, text)` frame. */
+  private def lmRareTrigramOf(docs: DataFrame): DataFrame = {
+    val s = docs.sparkSession
     val rareCount = graft.GraftConf.long(s, "spark.graft.lm.rareCount", 2L)
-    val pos = docsW(s, d)
+    val pos = docs
       .select(col("doc_id"),
         expr("filter(split(lower(text), ' '), t -> t != '')").as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -1164,7 +1168,7 @@ object TextAnalysis {
     * joins the rare-trigram output back on doc_id (one exchange), then
     * ONE partial-agg exchange over |sources| groups. */
   def filterFunnel(s: SparkSession, d: String): DataFrame =
-    funnelFlags(s, d)
+    funnelFlags(docsW(s, d))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("first_fail") === "len", 1L).otherwise(0L)).as("drop_len"),
@@ -1176,12 +1180,17 @@ object TextAnalysis {
       .orderBy(col("source"))
 
   /** The funnel's per-document verdict frame (doc_id, source,
-    * first_fail) — shared by [[filterFunnel]]'s aggregation and the
-    * end-to-end [[Curation.curationPipeline]], so the composed pipeline
-    * can never drift from the audited battery. */
-  private[operators] def funnelFlags(s: SparkSession, d: String): DataFrame = {
-    val lm = lmRareTrigram(s, d).select(col("doc_id"), col("kept").as("r_lm"))
-    docsW(s, d)
+    * first_fail) over a `documents` frame — shared by [[filterFunnel]]'s
+    * aggregation and the end-to-end [[Curation.curationPipeline]], so
+    * the composed pipeline can never drift from the audited battery.
+    * `carry` adds named per-row columns over `text`, evaluated in the
+    * same narrow pass before the LM join, so the join never carries the
+    * text. */
+  private[operators] def funnelFlags(docs: DataFrame,
+      carry: Seq[(String, Column)] = Nil): DataFrame = {
+    val lm = lmRareTrigramOf(docs).select(col("doc_id"), col("kept").as("r_lm"))
+    docs
+      .withColumns(carry.toMap)
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_words", size(col("toks")).cast("long"))
       .withColumn("stop_hits", expr(
@@ -1200,7 +1209,7 @@ object TextAnalysis {
           .when(col("top_tok").cast("double") / col("n_words") > 0.2, "rep")
           .when(!coalesce(col("r_lm"), lit(true)), "lm")
           .otherwise("pass"))
-      .select(col("doc_id"), col("source"), col("first_fail"))
+      .select((Seq("doc_id", "source", "first_fail") ++ carry.map(_._1)).map(col): _*)
   }
 
   // --------------------------------------------------------------- wiring

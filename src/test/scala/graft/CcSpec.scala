@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * cap — must converge in O(log diameter) rounds via pointer doubling.
   *
   * Small contracted graphs (≤ `spark.graft.cc.localMaxEdges`) are solved
-  * by a driver-side union-find instead of the loop; the chain tests here
-  * FORCE the distributed path (conf 0) so the O(log diameter) claim stays
-  * pinned, and a dedicated test asserts the two routes are label-identical.
+  * by a driver-side union-find instead of the loop; the chain and clique
+  * tests here FORCE the distributed path (conf 0) so their round bounds
+  * stay pinned, and a dedicated test asserts the two routes are
+  * label-identical.
   */
 class CcSpec extends SparkFunSuite {
 
@@ -22,11 +23,17 @@ class CcSpec extends SparkFunSuite {
   }
 
   /** Run `body` with the driver-side union-find disabled, so the
-    * distributed pointer-doubling loop is what executes. */
+    * distributed pointer-doubling loop is what executes; the conf's
+    * prior value (if any) is restored afterwards. */
   private def distributedOnly[A](body: => A): A = {
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
+    val key = "spark.graft.cc.localMaxEdges"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
     try body
-    finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("path graph: O(log diameter) rounds, exact labels") {
@@ -62,9 +69,12 @@ class CcSpec extends SparkFunSuite {
   }
 
   test("dense clique contracts before the loop: zero or near-zero rounds") {
+    // pinned on the distributed route: the union-find route always
+    // reports 0 rounds, which would make the bound below vacuous
     val nodes = 0L until 50L
     val clique = for (i <- nodes; j <- nodes if i < j) yield (i, j)
-    val (labels, rounds) = Dedup.connectedComponentsWithRounds(pairsDf(clique))
+    val (labels, rounds) = distributedOnly(
+      Dedup.connectedComponentsWithRounds(pairsDf(clique)))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     CacheScope.releaseAll()
     assert(got.values.forall(_ == 0L))

@@ -228,4 +228,159 @@ class CurationSpec extends SparkFunSuite {
     // and something survives each stage on the fixture
     assert(rows.map(_._3).sum > 0 && rows.map(_._4).sum > 0 && rows.map(_._5).sum > 0)
   }
+
+  // ------------------------------------------- adversarial curation corpus
+
+  /** A corpus built to break the fused vocabulary pass: an empty text,
+    * all-space texts (every lowercased token empty — DSIR must drop
+    * them), a one-token doc, empty tokens inside a doc, and İ (U+0130,
+    * which lowercases to two chars) and word-final Σ (which lowercases
+    * by context) inside phrases. The phrases repeat across docs so the
+    * LM and repetition rules let most regular docs through, and the
+    * target sources (src1–src3) lean on different phrases than the rest,
+    * so the classifier has a signal to vote on. `w127` shares the empty
+    * token's DSIR bucket (md5 prefix mod 256 = 140), so an empty token
+    * counted into the ratio table would move a weight. */
+  private lazy val adversarial: (String, Seq[(Long, String, String)]) = {
+    val phrases = Seq(
+      "the İstanbul ferry leaves at dawn",
+      "a ΟΔΟΣ of old stone runs",
+      "in the ΣΟΦΙΑ quarter KİTAP markets open",
+      "to the harbour Σ boats return w127",
+      "of every ΑΣ lamp lit",
+      "Apple and apple differ in case",
+      "winds carry salt over the roofs",
+      "children chase gulls near a pier")
+    val rnd = new scala.util.Random(11)
+    val regular = (10L until 70L).map { id =>
+      val src = s"src${1 + id % 5}"
+      val lo = if (id % 5 < 3) 0 else 2
+      val text = Seq.fill(5 + rnd.nextInt(4))(phrases(lo + rnd.nextInt(6))).mkString(" ")
+      (id, src, text)
+    }
+    val edge = Seq(
+      (1L, "src1", ""), (2L, "src4", "     "), (3L, "src2", "word"),
+      (4L, "src5", " "), (5L, "src3", "İ Σ ΑΣ ΟΔΟΣ"),
+      (6L, "src2", "the  a  in  of  to ΟΔΟΣ  İstanbul  ferry  leaves  at  dawn " +
+        "winds carry salt over the roofs a ΟΔΟΣ of old stone runs"))
+    val all = edge ++ regular
+    import spark.implicits._
+    val dir = TempDirs.scratch("graft_curation_adv_").toString
+    all.map { case (id, src, t) => (id, t, "en", src, t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    (dir, all)
+  }
+
+  private def md5hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
+  private def dsirBucketOf(w: String): Long =
+    java.lang.Long.parseLong(md5hex(w).take(6), 16) % 256
+
+  test("per-token lower() buckets equal the split(lower(text)) stream on an adversarial corpus") {
+    val (dir, _) = adversarial
+    val bucket = "t -> conv(substring(md5(t), 1, 6), 16, 10) % 256"
+    val streams = Tables.documents(spark, dir).selectExpr("doc_id",
+      "filter(split(lower(text), ' '), t -> t != '') AS text_lower",
+      "filter(transform(split(text, ' '), t -> lower(t)), t -> t != '') AS token_lower")
+      .selectExpr("doc_id", "text_lower", "token_lower",
+        s"transform(text_lower, $bucket) AS b_text",
+        s"transform(token_lower, $bucket) AS b_token")
+      .collect()
+    assert(streams.length === adversarial._2.size)
+    streams.foreach { r =>
+      assert(r.getSeq[String](1) === r.getSeq[String](2), s"doc ${r.getLong(0)} tokens")
+      assert(r.getSeq[String](3) === r.getSeq[String](4), s"doc ${r.getLong(0)} buckets")
+    }
+    // the hard cases really are in the stream: İ lowercases to i + U+0307
+    // and a word-final Σ to ς
+    val lowered = streams.flatMap(_.getSeq[String](1)).toSet
+    assert(lowered.contains("i̇stanbul") && lowered.contains("οδος"))
+  }
+
+  test("classifier, DSIR weights and the pipeline equal from-scratch references on an adversarial corpus") {
+    val (dir, all) = adversarial
+    val target = Set("src1", "src2", "src3")
+    def raw(t: String) = t.split(" ", -1).toSeq
+    def low(t: String) = t.toLowerCase(java.util.Locale.ROOT).split(" ", -1).filter(_.nonEmpty).toSeq
+    def utf8Lt(a: String, b: String) =
+      java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0
+
+    // DSIR: hashed lowercase features, BigInt fixed point, empty docs drop
+    val feat = all.flatMap { case (id, src, t) => low(t).map(w => (id, src, dsirBucketOf(w))) }
+    val ratio = feat.groupBy(_._3).map { case (b, occ) =>
+      val tc = occ.count(o => target(o._2))
+      b -> (BigInt(1000000) * (tc + 1) / (occ.size + 1)).toLong
+    }
+    val dsir = feat.groupBy(_._1).map { case (id, occ) =>
+      val w = occ.map(o => ratio(o._3)).sum
+      id -> (occ.size.toLong, w, w / occ.size)
+    }
+    assert(!dsir.contains(1L) && !dsir.contains(2L) && !dsir.contains(4L))
+    val gotDsir = SparkEntry.queries("q_dsir_weights")(spark, dir).collect()
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toSeq
+    CacheScope.releaseAll()
+    assert(gotDsir === dsir.toSeq.sortBy(_._1))
+
+    // classifier: raw tokens (empty ones included), one ranking, ±8 votes
+    val counts = all.flatMap { case (_, src, t) => raw(t).map(_ -> target(src)) }
+      .groupBy(_._1).map { case (tok, occ) =>
+        (tok, occ.count(_._2).toLong, occ.count(!_._2).toLong)
+      }.toSeq
+    val (pt, nt) = (counts.map(_._2).sum, counts.map(_._3).sum)
+    val ranked = counts.map { case (tok, pc, nc) =>
+      tok -> (BigInt(1000000) * (pc + 1) * (nt + 1) / (BigInt(nc + 1) * (pt + 1))).toLong
+    }.sortWith { case ((ta, wa), (tb, wb)) => wa > wb || (wa == wb && utf8Lt(ta, tb)) }
+      .map(_._1)
+    val vote = ranked.zipWithIndex.map { case (tok, i) =>
+      tok -> ((if (i < 8) 1 else 0) + (if (i >= ranked.size - 8) -1 else 0))
+    }.filter(_._2 != 0).toMap
+    val cls = all.map { case (id, _, t) =>
+      val hits = raw(t).distinct.flatMap(vote.get)
+      id -> (hits.count(_ > 0).toLong, hits.count(_ < 0).toLong)
+    }.toMap
+    val gotCls = SparkEntry.queries("q_quality_classifier")(spark, dir).collect()
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)), r.getLong(3), r.getBoolean(4)))
+    CacheScope.releaseAll()
+    assert(gotCls.map(r => (r._1, r._2)).toSeq === cls.toSeq.sortBy(_._1))
+    assert(gotCls.forall { case (_, (vp, vn), sc, p) => sc == vp - vn && p == (sc > 0) })
+
+    // the pipeline: funnel battery ∧ classifier vote, then the DSIR top
+    // quartile of the eligible docs that carry a weight
+    val tris = all.map { case (id, _, t) => id -> low(t).sliding(3).filter(_.size == 3).toSeq }
+    val gramCnt = tris.flatMap(_._2).groupBy(identity).map { case (g, o) => g -> o.size }
+    val lmKept = tris.filter(_._2.nonEmpty).map { case (id, gs) =>
+      id -> (gs.count(gramCnt(_) <= 2).toDouble / gs.size <= 0.7)
+    }.toMap
+    def passes(id: Long, t: String): Boolean = {
+      val ws = raw(t)
+      val n = ws.size
+      val quality = BigDecimal.valueOf(
+        math.min(1.0, t.codePointCount(0, t.length).toDouble / 400.0) * 0.5 +
+          ws.distinct.size.toDouble / n * 0.5)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      n >= 20 && n <= 5000 && ws.count(Set("the", "a", "in", "of", "to")) >= 2 &&
+        quality >= 0.5 && ws.distinct.map(x => ws.count(_ == x)).max.toDouble / n <= 0.2 &&
+        lmKept.getOrElse(id, true)
+    }
+    val rows = all.map { case (id, src, t) =>
+      val f = passes(id, t)
+      (id, src, f, f && cls(id)._1 > cls(id)._2)
+    }
+    val pool = rows.filter(r => r._4 && dsir.contains(r._1))
+    val kept = pool.map(r => (r._1, dsir(r._1)._3)).sortBy { case (id, avg) => (-avg, id) }
+      .take((pool.size + 3) / 4).map(_._1).toSet
+    val pipe = rows.groupBy(_._2).map { case (src, rs) =>
+      (src, rs.size.toLong, rs.count(_._3).toLong, rs.count(_._4).toLong,
+        rs.count(r => kept(r._1)).toLong)
+    }.toSeq.sortBy(_._1)
+    val gotPipe = SparkEntry.queries("q_curation_pipeline")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+    CacheScope.releaseAll()
+    assert(gotPipe === pipe)
+    assert(pipe.map(_._4).sum > 1 && pipe.map(_._5).sum > 0,
+      s"the corpus must exercise every stage: $pipe")
+  }
 }

@@ -2,9 +2,10 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.operators.{Curation, TextAnalysis}
 
@@ -165,18 +166,22 @@ class LmDsirSpec extends SparkFunSuite {
     }
   }
 
-  test("dsir scoring joins the 256-row feature table by broadcast") {
+  test("dsir scoring reads the ratio table as a literal: no join, no token explode") {
     val df = Curation.dsirWeights(spark, "/root/testdata/sf0.01")
     df.collect() // finalize AQE
+    CacheScope.releaseAll()
     def descend(p: SparkPlan): Seq[SparkPlan] =
       p +: (p.children.flatMap(descend) ++ (p match {
         case a: AdaptiveSparkPlanExec => descend(a.executedPlan)
         case q: QueryStageExec        => descend(q.plan)
         case _                        => Nil
       }))
-    val nodes = descend(df.queryExecution.executedPlan)
-    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeExec]),
-      "feature-ratio table must broadcast, not shuffle the token stream twice:\n" +
+    val tokenStream = descend(df.queryExecution.executedPlan).filter {
+      case _: BaseJoinExec | _: GenerateExec | _: BroadcastExchangeExec => true
+      case _ => false
+    }
+    assert(tokenStream.isEmpty,
+      "per-doc weights must be one narrow pass over the row, not a token stream:\n" +
         df.queryExecution.executedPlan.toString.take(3000))
   }
 }

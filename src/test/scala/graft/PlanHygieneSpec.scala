@@ -251,17 +251,14 @@ class PlanHygieneSpec extends AnyFunSuite {
     // partition — the classic 100 TB serialization point. The engine's
     // two-phase pattern (bucket map-side, window the tiny bucket table,
     // broadcast back) means every global window in main runs over a
-    // frame bounded BY CONSTRUCTION (≤257 quality buckets, ≤978 weight
-    // buckets, vocab-sized token table). Pin that: any catalog query
+    // frame bounded BY CONSTRUCTION (≤257 quality buckets, per-source
+    // aggregates). Pin that: any catalog query
     // planning a global window outside this allowlist is a regression —
     // either restructure it two-phase or, if its input is provably
     // bounded, add it here WITH the bound in a comment at the site.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val allowed = Map(
       "q_token_budget" -> "≤257 quality buckets",
-      "q_dsir_select" -> "≤978 weight buckets (avg_weight_q6 ≤ 1e6 DIV 1024)",
-      "q_quality_classifier" -> "vocab-sized count table",
-      "q_curation_pipeline" -> "composes the three above",
       "q_mix_sources" -> "per-source aggregate (≤|sources| rows)",
       "q_mix_temperature" -> "per-source aggregate (≤|sources| rows)")
     val haveGlobal = SparkEntry.queries.toSeq.sortBy(_._1)

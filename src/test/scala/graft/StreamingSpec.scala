@@ -14,6 +14,12 @@ class StreamingSpec extends SparkFunSuite {
   private def t(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00")
 
+  /** Put `key` back to the value captured before a test changed it. */
+  private def restore(key: String, prev: Option[String]): Unit = prev match {
+    case Some(v) => spark.conf.set(key, v)
+    case None => spark.conf.unset(key)
+  }
+
   test("MemoryStream tumbling counts match the batch aggregation") {
     val s = spark
     import s.implicits._
@@ -68,10 +74,7 @@ class StreamingSpec extends SparkFunSuite {
       val viaRocks = Streaming.streamDedup(s, sf).collect()
       assert(viaRocks.length === graft.Tables.events(s, sf).count())
       assert(viaRocks.map(_.getAs[Long]("event_id")).distinct.length === viaRocks.length)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    } finally restore(key, prev)
   }
 
   test("flatMapGroupsWithState sessionizer emits closed sessions across batches") {
@@ -312,6 +315,7 @@ class StreamingSpec extends SparkFunSuite {
     operators.TextAnalysis.writeWinnowIndexOf(
       Seq(1L -> "seed1a seed1b seed1c seed1d seed1e seed1f seed1g seed1h")
         .toDF("doc_id", "text"), idx)
+    val prevMinShared = s.conf.getOption("spark.graft.winnow.minShared")
     s.conf.set("spark.graft.winnow.minShared", "1")
     try {
       val evalSel = CacheScope.track(
@@ -358,7 +362,7 @@ class StreamingSpec extends SparkFunSuite {
       assert(offline.map(x => (x.getAs[Long]("eval_id"), x.getAs[Long]("train_id")))
         .toSet === Set((901L, 20L)), "offline forensics diverge from the monitor")
     } finally {
-      s.conf.unset("spark.graft.winnow.minShared")
+      restore("spark.graft.winnow.minShared", prevMinShared)
       CacheScope.releaseAll()
     }
   }
@@ -470,6 +474,8 @@ class StreamingSpec extends SparkFunSuite {
     operators.TextAnalysis.writeWinnowIndexOf(
       Seq(1L -> "seed1a seed1b seed1c seed1d seed1e seed1f seed1g seed1h")
         .toDF("doc_id", "text"), idx)
+    val prevMinShared = s.conf.getOption("spark.graft.winnow.minShared")
+    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.graft.winnow.minShared", "1")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -536,8 +542,8 @@ class StreamingSpec extends SparkFunSuite {
       assert(offline === afterKill(1),
         s"offline forensics diverge from the monitor: $offline vs ${afterKill(1)}")
     } finally {
-      s.conf.unset("spark.graft.winnow.minShared")
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      restore("spark.graft.winnow.minShared", prevMinShared)
+      restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
       CacheScope.releaseAll()
     }
   }
@@ -546,11 +552,14 @@ class StreamingSpec extends SparkFunSuite {
     // The operator default must be the scale-safe value (a 100 TB stream
     // started without the conf must NOT freeze 8 state stores into its
     // checkpoint); fixture entry points pin 8 explicitly in the harness.
-    spark.conf.unset("spark.graft.stream.statePartitions")
-    assert(Streaming.resolvedStatePartitions(spark)
-      === spark.sparkContext.defaultParallelism)
-    spark.conf.set("spark.graft.stream.statePartitions", "8")
-    try assert(Streaming.resolvedStatePartitions(spark) === 8)
-    finally spark.conf.unset("spark.graft.stream.statePartitions")
+    val key = "spark.graft.stream.statePartitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      assert(Streaming.resolvedStatePartitions(spark)
+        === spark.sparkContext.defaultParallelism)
+      spark.conf.set(key, "8")
+      assert(Streaming.resolvedStatePartitions(spark) === 8)
+    } finally restore(key, prev)
   }
 }
