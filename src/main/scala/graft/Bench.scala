@@ -52,11 +52,12 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffleParts)
       .config("spark.sql.adaptive.enabled", "true")
-      // fixture-scale state geometry: the operator default is
-      // defaultParallelism (the 100 TB-safe value); the harness pins the
-      // measured-best fixture count so tiny streams don't spin up a
-      // state store per core (see Streaming.scopedStateParts) and the
-      // driver's stream timings stay comparable round-over-round
+      // fixture-scale state geometry: the operator default is the
+      // session's shuffle-partition count (the 100 TB-safe value); the
+      // harness pins the measured-best fixture count so tiny streams
+      // don't spin up a state store per core (see
+      // Streaming.scopedStateParts) and the driver's stream timings
+      // stay comparable round-over-round
       .config("spark.graft.stream.statePartitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -320,24 +321,16 @@ object Bench {
   def measure(
       spark: SparkSession, sfDir: String, reps: Int,
       queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      capture: (String, org.apache.spark.sql.DataFrame) => Unit = (_, _) => (),
-      partitionsFor: String => Option[Int] = _ => None)
+      capture: (String, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
       : (Seq[(String, Double)], Seq[String]) = {
-    val (detailed, failures) =
-      measureDetailed(spark, sfDir, reps, queries, capture, partitionsFor)
+    val (detailed, failures) = measureDetailed(spark, sfDir, reps, queries, capture)
     (detailed.map { case (n, rs) => n -> medianRep(rs).totalSec }, failures)
   }
 
-  /** `partitionsFor`: optional PER-QUERY `spark.sql.shuffle.partitions`
-    * override applied before a query's reps (ScaleSmoke's
-    * expansion-aware sizing — heavy families size from their measured
-    * shuffle expansion, not one corpus-level count). None leaves the
-    * session's current count untouched. */
   def measureDetailed(
       spark: SparkSession, sfDir: String, reps: Int,
       queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      capture: (String, org.apache.spark.sql.DataFrame) => Unit = (_, _) => (),
-      partitionsFor: String => Option[Int] = _ => None)
+      capture: (String, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
       : (Seq[(String, Seq[RepTiming])], Seq[String]) = {
     val timeoutSec = GraftConf.int(spark, "spark.graft.bench.queryTimeoutSec", 900)
     require(timeoutSec > 0, "spark.graft.bench.queryTimeoutSec must be positive")
@@ -346,16 +339,7 @@ object Bench {
     val watchdog = java.util.concurrent.Executors.newCachedThreadPool { r =>
       val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t
     }
-    // per-query overrides must not leak: a query with no override runs
-    // at the SESSION's count (not the previous query's), and the
-    // session leaves this call with the count it entered with —
-    // anything after the pass (ScaleSmoke's recall probe, a library
-    // caller's next job) must not inherit the last measured query's
-    // sizing
-    val entryShufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val attempted = queries.map { case (name, fn) =>
-      spark.conf.set("spark.sql.shuffle.partitions",
-        partitionsFor(name).map(_.toString).getOrElse(entryShufflePartitions))
       var timedOut = false
       val times = (1 to reps).flatMap { _ =>
         if (timedOut) None
@@ -429,7 +413,6 @@ object Bench {
       name -> (if (times.nonEmpty && !timedOut) Some(times) else None)
     }
     watchdog.shutdownNow()
-    spark.conf.set("spark.sql.shuffle.partitions", entryShufflePartitions)
     (attempted.collect { case (n, Some(t)) => n -> t },
       attempted.collect { case (n, None) => n })
   }

@@ -20,14 +20,6 @@ import org.apache.spark.sql.SparkSession
   *     rest, and with no profile the hard defaults apply. The preset
   *     deliberately bundles only SAFETY/PERF switches:
   *
-  *      - `spark.graft.shuffle.expansionAware=true` — heavy-family
-  *        shuffle-partition sizing consumes the MEASURED per-family
-  *        input→shuffle expansion ([[ShuffleExpansionPerCorpusByte]])
-  *        instead of assuming one global expansion for every family.
-  *        Result-identical (partition counts only); at fixture scale
-  *        every family still sizes to the cpu floor by calibration, at
-  *        TB scale the ×0.4–×62 measured spread differentiates counts
-  *        by family instead of under-partitioning the heavy ones.
   *      - `spark.graft.lsh.maxBucket=10000` — degenerate-bucket guard on
   *        all three LSH band joins. Result-identical on healthy input
   *        (the adaptive probe runs the exact unguarded plan when no
@@ -112,10 +104,10 @@ object GraftConf {
 
   val ProfileKey = "spark.graft.profile"
 
-  /** Default for `spark.graft.shuffle.targetBytesPerPartition`: the
-    * COMPRESSED parquet input bytes whose derived shuffle state one
-    * partition should carry (4 MiB input ≈ tens-to-hundreds of MB in
-    * flight after decompression + token explosion). Deliberately sized
+  /** Target of [[sizedShufflePartitions]]: the COMPRESSED parquet
+    * input bytes whose derived shuffle state one partition should
+    * carry (4 MiB input ≈ tens-to-hundreds of MB in flight after
+    * decompression + token explosion). Deliberately sized
     * so LOCAL FIXTURES STAY AT THE CPU FLOOR: the round-17 A/B
     * (NOTES.md, reps=3 medians on the clean ×10 corpus) measured
     * bytes-proportional over-partitioning at 1.2–2.2× SLOWER across
@@ -131,6 +123,11 @@ object GraftConf {
     * pretending bytes carry that signal. */
   val DefaultShuffleTargetBytes: Long = 4L * 1024 * 1024
 
+  /** Upper clamp of [[sizedShufflePartitions]] — bounds task-scheduling
+    * overhead. Exposed so callers that MULTIPLY the sized count (the
+    * smoke's hot-skew factor) can re-clamp against the same bound. */
+  val DefaultShufflePartitionCap: Int = 4096
+
   /** Shuffle-partition count sized to the corpus: ⌈inputBytes /
     * targetBytes⌉ clamped to [cpus, cap]. The floor keeps every core
     * busy AND is the measured-best count for fixture-scale corpora
@@ -140,11 +137,6 @@ object GraftConf {
     * cluster deployment applies by hand. ShuffleSizingSpec pins the
     * clamps, linearity, and both round-17 calibration points (fixture
     * → floor, TB-scale → thousands). */
-  /** Upper clamp of [[sizedShufflePartitions]] — bounds task-scheduling
-    * overhead. Exposed so callers that MULTIPLY the sized count (the
-    * smoke's hot-skew factor) can re-clamp against the same bound. */
-  val DefaultShufflePartitionCap: Int = 4096
-
   def sizedShufflePartitions(inputBytes: Long, cpus: Int,
       targetBytes: Long = DefaultShuffleTargetBytes,
       cap: Int = DefaultShufflePartitionCap): Int = {
@@ -155,154 +147,9 @@ object GraftConf {
     math.min(math.max(byBytes, cpus.toDouble), cap.toDouble).toInt
   }
 
-  // ------------------------------------------------------------------
-  // EXPANSION-AWARE sizing (round 19). The input-bytes rule above sizes
-  // every family from one global 4 MiB/partition dial, but the measured
-  // per-family input→shuffle expansion spans ×0.4–×62 of the compressed
-  // corpus (SCALESMOKE_shuffle r18/r19) — at TB scale the heavy
-  // families are under-partitioned by exactly the factor the smoke
-  // already measures. These constants feed the measured LARGE-REGIME
-  // slope back into the rule: partitions = ⌈corpusBytes × factor /
-  // targetShuffleBytes⌉, same [cpus, cap] clamps. Calibrated so every
-  // fixture-scale corpus still lands ON the floor (the A/B-measured
-  // best count — the heaviest factor × the 11.4 MiB ×10 smoke corpus
-  // is ~0.7 GiB of shuffle, 11 partitions at the 64 MiB target, under
-  // the 32-cpu floor) while a TB corpus differentiates by family
-  // instead of assuming one expansion for all.
-  // ------------------------------------------------------------------
-
-  /** Default for `spark.graft.shuffle.targetShuffleBytesPerPartition`:
-    * compressed SHUFFLE bytes one partition should carry. 64 MiB of
-    * lz4-compressed shuffle decompresses to roughly the few-hundred-MB
-    * in-flight state per task the 4 MiB INPUT dial was sized for. */
-  val DefaultTargetShuffleBytes: Long = 64L * 1024 * 1024
-
-  /** Expansion assumed for a family with NO measured factor: 16× makes
-    * the shuffle-target rule degenerate EXACTLY to the legacy input
-    * rule (corpus × 16 / 64 MiB ≡ corpus / 4 MiB), so unmeasured
-    * families size precisely as before. */
-  val DefaultShuffleExpansion: Double = 16.0
-
-  /** Measured shuffle-write bytes per COMPRESSED CORPUS byte, per heavy
-    * family, at the ×10 derived sf0.1 smoke corpus (11.4 MiB) — the
-    * large-regime slope (the 1× point sits in the broadcast-join regime
-    * and understates by ~50×; NOTES r18 trend table). Sources:
-    * SCALESMOKE_shuffle r18 rows, with ngram/containment re-measured
-    * r19 AFTER the verify-join broadcast + positional-filter rework
-    * (1618→464, 1894→702 MiB), clusters post checkpoint-fix, and the
-    * five span-family rows refreshed r20 AFTER the sidecar/in-row
-    * serve rework (494→127 MiB etc.) — the refresh the divergence
-    * guard in ShuffleSizingSpec demanded, now that the standing
-    * artifact carries `scaled_corpus_mb` and the guard is armed.
-    * Refreshed each round from the smoke's shuffle profile. */
-  val ShuffleExpansionPerCorpusByte: Map[String, Double] = Map(
-    "q_dedup_containment" -> 64.8, "q_dedup_containment_bucketed" -> 64.9,
-    "q_dedup_containment_topn" -> 62.4,
-    "q_dedup_ngram" -> 43.2, "q_dedup_ngram_bucketed" -> 43.2,
-    "q_dedup_ngram_topn" -> 42.6,
-    "q_span_removal_served" -> 12.9,
-    // the r21 refresh (fleet artifact SCALESMOKE_shuffle_latest.json):
-    // bm25_batch dropped 10.5 → 8.3 with the in-row tf fold (the
-    // token-occurrence aggregation exchange is gone), curation and the
-    // CC-backed cluster families eased with the driver union-find (no
-    // per-round checkpoint shuffles), containment crept +1.7 within its
-    // noise band — the map keeps the MEASURED numbers, which remain the
-    // conservative sizing side at real scale (widen's input-sized
-    // exchange fires on the single-file ×10 smoke corpus but not on a
-    // many-split 100 TB scan)
-    "q_bm25_batch_indexed" -> 9.2, "q_bm25_batch" -> 8.3,
-    "q_bm25_batch_served" -> 5.0,
-    "q_dedup_minhash" -> 25.9, "q_dedup_minhash_bucketed" -> 26.1,
-    "q_span_dedup_served" -> 10.3, "q_span_removal_shard_served" -> 3.0,
-    "q_span_dedup_shard_served" -> 3.2, "q_span_dedup" -> 3.9,
-    "q_bpe_merges" -> 7.9, "q_semantic_dedup_lsh" -> 4.3,
-    "q_repetition_filter" -> 5.7, "q_curation_pipeline" -> 9.3,
-    "q_dedup_clusters" -> 3.0, "q_dedup_clusters_collapsed" -> 3.0,
-    "q_winnow_contamination_indexed" -> 2.4, "q_dedup_minhash_topn" -> 2.6,
-    "q_cdc_dedup" -> 2.3, "q_knn_ivf_indexed" -> 1.0,
-    "q_winnow_contamination" -> 1.8, "q_winnow_matches" -> 1.6,
-    "q_winnow_fingerprints" -> 1.3, "q_winnow_contamination_served" -> 0.6,
-    "q_bm25_batch_shard_served" -> 0.2, "q_knn_ivf_scaled_served" -> 0.2,
-    "q_dedup_incremental_served" -> 0.4,
-    "q_dedup_incremental_shard_served" -> 0.1,
-    "q_knn_ivf_served" -> 0.1, "q_phrase_served" -> 0.1,
-    "q_bm25_served" -> 0.1)
-
-  /** [[sizedShufflePartitions]] with the family's measured expansion
-    * applied: sizes from EXPECTED SHUFFLE bytes (corpus × factor)
-    * against a shuffle-byte target instead of from input bytes against
-    * an input target. `factors` defaults to the static snapshot;
-    * callers with a session should pass [[activeExpansionFactors]] so a
-    * deployment can point sizing at THIS round's measured artifact.
-    * Families absent from `factors` fall back to the snapshot, then to
-    * [[DefaultShuffleExpansion]] — exactly the legacy input rule. */
-  def expansionSizedPartitions(query: String, corpusBytes: Long, cpus: Int,
-      targetShuffleBytes: Long = DefaultTargetShuffleBytes,
-      cap: Int = DefaultShufflePartitionCap,
-      factors: Map[String, Double] = ShuffleExpansionPerCorpusByte): Int = {
-    val factor = factors.getOrElse(query,
-      ShuffleExpansionPerCorpusByte.getOrElse(query, DefaultShuffleExpansion))
-    val expected = math.ceil(math.max(corpusBytes, 0L) * factor).toLong
-    sizedShufflePartitions(expected, cpus, targetShuffleBytes, cap)
-  }
-
-  /** Parse a ScaleSmoke `shuffle_profile.json` artifact (the
-    * `SCALESMOKE_shuffle_latest.json` mirror) into per-query expansion
-    * factors: scaled-side shuffle-write bytes / scaled corpus bytes —
-    * the same definition [[ShuffleExpansionPerCorpusByte]] snapshots.
-    * Returns EMPTY when the file is absent, unparseable, or predates
-    * the `scaled_corpus_mb` field (pre-round-20 artifacts carry only
-    * per-query input bytes, whose denominator is not the corpus);
-    * callers decide whether empty means "fall back to the snapshot"
-    * ([[activeExpansionFactors]] when the conf is unset) or "fail
-    * fast" (when a deployment explicitly pointed at an artifact). */
-  def expansionFactorsFrom(path: String): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-      val corpusMb = root.path("scaled_corpus_mb").asDouble(0.0)
-      if (corpusMb <= 0.0) Map.empty
-      else {
-        val rows = root.path("rows")
-        (0 until rows.size).flatMap { i =>
-          val r = rows.get(i)
-          val q = r.path("query").asText("")
-          val w = r.path("scaled_shuffle_write_mb")
-          if (q.nonEmpty && w.isNumber) Some(q -> w.asDouble() / corpusMb)
-          else None
-        }.toMap
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** The expansion-factor map sizing should consume — the round-19
-    * verdict's staleness loop, closed: when
-    * `spark.graft.shuffle.expansionArtifact` names a shuffle-profile
-    * artifact, factors come from that MEASURED file (per-query fallback
-    * to the snapshot inside [[expansionSizedPartitions]]); a set-but-
-    * unusable artifact FAILS FAST (a deployment that pointed sizing at
-    * an artifact expects it consumed — silently reverting to the frozen
-    * snapshot is exactly the divergence failure the conf exists to
-    * kill). Unset, the static snapshot applies, and
-    * ShuffleSizingSpec's divergence guard is what catches staleness. */
-  def activeExpansionFactors(s: SparkSession): Map[String, Double] =
-    get(s, "spark.graft.shuffle.expansionArtifact") match {
-      case None => ShuffleExpansionPerCorpusByte
-      case Some(path) =>
-        val m = expansionFactorsFrom(path)
-        require(m.nonEmpty,
-          s"spark.graft.shuffle.expansionArtifact=$path is missing, " +
-            "unparseable, or predates the scaled_corpus_mb field — " +
-            "point it at a current shuffle_profile.json / " +
-            "SCALESMOKE_shuffle_latest.json, or unset it to size from " +
-            "the built-in snapshot")
-        m
-    }
-
   /** Conf values `spark.graft.profile=scale` implies when the conf is
     * not explicitly set. See the object doc for the per-key rationale. */
   val scaleDefaults: Map[String, String] = Map(
-    "spark.graft.shuffle.expansionAware" -> "true",
     "spark.graft.lsh.maxBucket" -> "10000",
     "spark.graft.containment.maxDocsPerShingle" -> "10000",
     "spark.graft.semdedup.lsh" -> "true",
@@ -434,10 +281,6 @@ object GraftConf {
     "spark.graft.search.terms",
     "spark.graft.semdedup.lsh",
     "spark.graft.shingle.verifyBroadcastBytes",
-    "spark.graft.shuffle.expansionArtifact",
-    "spark.graft.shuffle.expansionAware",
-    "spark.graft.shuffle.targetBytesPerPartition",
-    "spark.graft.shuffle.targetShuffleBytesPerPartition",
     "spark.graft.span.minCut",
     "spark.graft.stream.statePartitions",
     "spark.graft.text.hhLocalCandidates",

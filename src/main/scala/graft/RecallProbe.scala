@@ -1,29 +1,21 @@
 package graft
-import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{broadcast, col, expr, round, row_number, sqrt}
 
-/** Measurement mains for ANN quality (not catalog queries, no oracle):
-  *
-  *  1. the original Lloyd-depth recall/objective trace (IVF + PQ at
-  *     sf0.001/sf0.01) — the evidence behind "one Lloyd step: objective
-  *     up 1.27×, recall within noise" in [[Similarity.knnIvf]]'s doc;
-  *  2. the round-18 SCALED-CELL-COUNT recall sweep: recall@10 of the
-  *     16-cell (oracle-pinned) vs ⌈√N⌉-cell ([[Similarity
-  *     .knnIvfScaledServed]]) quantizers across nprobe 2/4/8, at sf0.1
-  *     and the ×10 derived corpus — the QUALITY half of the
-  *     cell-scaling story (the pruning half is [[IvfScaleProbe]]'s
-  *     probed/universe table). Ground truth is brute-force cosine
-  *     top-10 over the serve faces' own 30-query batch, computed here
-  *     with the exact [[Similarity.knnBrute]] kernel (same rounding,
-  *     same tie order). Output: `IVFRECALL` lines → NOTES table.
+/** Brute-force ANN ground truth (not catalog queries, no oracle): the
+  * exact top-k sets that ScaleSmoke's recall-at-scale rows and
+  * IvfRecallGuardSpec compare the IVF/PQ serving faces against. The
+  * Lloyd-depth recall trace and the 16-cell vs ⌈√N⌉-cell recall@10
+  * sweep measured with these references are recorded in NOTES.md
+  * ("IVF cell-scaling QUALITY — recall@10 table", round 18).
   */
 object RecallProbe {
 
   /** Brute-force cosine top-k (excluding self) for the serve faces'
-    * pinned 30-query batch — [[Similarity.knnBrute]]'s kernel with the
-    * batch and k parameterized (that face pins qid < 20, k = 5 for its
-    * oracle; the sweep needs the serving batch at k = 10). */
+    * pinned 30-query batch — [[graft.operators.Similarity.knnBrute]]'s
+    * kernel with the batch and k parameterized (that face pins qid < 20,
+    * k = 5 for its oracle; the recall rows need the serving batch at
+    * k = 10). */
   private[graft] def bruteTopK(spark: SparkSession, dir: String, k: Int): Set[(Long, Long)] = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.VectorFunctions.register(spark)
@@ -65,86 +57,5 @@ object RecallProbe {
       .filter(col("rn") <= k)
       .select(col("qid"), col("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]").config("spark.sql.shuffle.partitions","16")
-      .config("spark.sql.session.timeZone","UTC").config("spark.ui.enabled","false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (sf <- Seq("/root/testdata/sf0.001","/root/testdata/sf0.01")) {
-      val brute3 = Similarity.knnBrute(spark, sf).filter(col("rn") <= 3).collect()
-        .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
-      def recall(df: org.apache.spark.sql.DataFrame): Double = {
-        val got = df.filter(col("qid") < 20).collect()
-          .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
-        brute3.intersect(got).size.toDouble / brute3.size
-      }
-      for (it <- 0 to 4) {
-        val r = recall(Similarity.knnIvfImpl(spark, sf, it))
-        val obj = Similarity.ivfTop2(spark, sf, it)
-          .filter(col("crk") === 1)
-          .agg(org.apache.spark.sql.functions.avg(col("cs"))).head().getDouble(0)
-        println(f"RECALL $sf iters=$it r=$r%.4f obj=$obj%.4f")
-        CacheScope.releaseAll(); spark.catalog.clearCache()
-      }
-      // PQ: recall@3 of ADC scoring with seed vs Lloyd-refined codebooks
-      // (PqSpec pins that refinement monotonically cuts quantization
-      // error; this measures whether that translates to recall)
-      for (it <- 0 to 3) {
-        spark.conf.set("spark.graft.pq.lloydIters", it.toString)
-        try {
-          val r = recall(Similarity.knnPq(spark, sf))
-          println(f"PQRECALL $sf iters=$it r=$r%.4f")
-        } finally spark.conf.unset("spark.graft.pq.lloydIters")
-        CacheScope.releaseAll(); spark.catalog.clearCache()
-      }
-      CacheScope.releaseAll(); spark.catalog.clearCache()
-    }
-    // the ×10 sweep builds a derived corpus in scratch and takes minutes
-    // — opt-in (ADVICE r18: unconditional, it made the formerly-cheap
-    // Lloyd trace impossible to run alone and pinned the main to one
-    // box's absolute path). SPARK_GRAFT_RECALL_SWEEP=1 enables;
-    // SPARK_GRAFT_RECALL_SWEEP_BASE overrides the base corpus dir.
-    if (sys.env.get("SPARK_GRAFT_RECALL_SWEEP").contains("1"))
-      scaledSweep(spark,
-        sys.env.getOrElse("SPARK_GRAFT_RECALL_SWEEP_BASE", "/root/testdata/sf0.1"))
-    spark.stop()
-  }
-
-  /** The round-18 cell-scaling recall sweep (section 2 of the object
-    * doc). One trained index per (corpus, cell count); served at each
-    * nprobe through [[Similarity.knnFromIvfIndexSwept]] — the real
-    * partition-pruned serving path, k widened to 10. */
-  private def scaledSweep(spark: SparkSession, sweepBase: String): Unit = {
-    val x10 = TempDirs.scratch("graft_recall_x10_").toString
-    ScaleSmoke.buildScaled(spark, sweepBase, 10, x10)
-    for ((tag, dir) <- Seq("sf0.1" -> sweepBase, "x10" -> x10)) {
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val n = emb.count()
-      val queries = emb.filter(col("vec_id") < 30)
-        .select(col("vec_id"), col("embedding"))
-      val truth = bruteTopK(spark, dir, 10)
-      for ((ctag, k) <- Seq("16" -> 16, "sqrtN" -> Similarity.scaledCellCount(n))) {
-        val path = TempDirs.scratch(s"graft_recall_ivf_${ctag}_")
-          .resolve("idx").toString
-        // the scaled face's pinned training knobs: first-k seeds, one
-        // Lloyd step, no early stop (Similarity.knnIvfScaledServed)
-        Similarity.writeIvfIndexModel(path, Similarity.ivfModel(
-          spark, dir, lloydIters = 1, seeding = "first",
-          objectiveEps = 0.0, cells = k))
-        CacheScope.releaseAll(); spark.catalog.clearCache()
-        for (np <- Seq(2, 4, 8)) {
-          val (res, probed) = Similarity.knnFromIvfIndexSwept(queries, path, np, 10)
-          val got = res.collect()
-            .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
-          val rec = truth.intersect(got).size.toDouble / truth.size
-          println(f"IVFRECALL corpus=$tag n=$n cells=$k mode=$ctag nprobe=$np " +
-            f"probed=$probed recall@10=$rec%.4f")
-        }
-        CacheScope.releaseAll(); spark.catalog.clearCache()
-      }
-    }
   }
 }

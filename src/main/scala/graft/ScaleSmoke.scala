@@ -253,7 +253,7 @@ object ScaleSmoke {
     if (buildHot) appendHotGroup(spark, workDir)
     if (buildOnly) { spark.stop(); return }
     // per-query shuffle-byte accounting (free: two map updates per
-    // stage) — the NOTES input->shuffle expansion table's source
+    // stage) — the source of NOTES.md "Per-family shuffle expansion"
     val shuffleStats = ShuffleStats.install(spark.sparkContext)
     if (hotOnly) {
       val (srcPath, noHot) = hotOnlyNoHot.get
@@ -303,12 +303,10 @@ object ScaleSmoke {
       }
     }
     autoSizePartitions(spark, baseDir)
-    val (baseTimes, baseFails) = Bench.measure(spark, baseDir, reps = 1, qs,
-      partitionsFor = expansionSizing(spark, baseDir))
+    val (baseTimes, baseFails) = Bench.measure(spark, baseDir, reps = 1, qs)
     var baseShuffle = drainShuffle(shuffleStats)
     autoSizePartitions(spark, workDir)
-    val (scaledTimes, scaledFails) = Bench.measure(spark, workDir, reps = 1, qs,
-      partitionsFor = expansionSizing(spark, workDir))
+    val (scaledTimes, scaledFails) = Bench.measure(spark, workDir, reps = 1, qs)
     var scaledShuffle = drainShuffle(shuffleStats)
     var bt = baseTimes.toMap
     var st = scaledTimes.toMap
@@ -339,12 +337,10 @@ object ScaleSmoke {
         s"for ${escalate.mkString(", ")} — re-measuring at reps=3 medians")
       val eqs = qs.filter { case (n, _) => escalate.contains(n) }
       autoSizePartitions(spark, baseDir)
-      val (b3, _) = Bench.measure(spark, baseDir, reps = 3, eqs,
-        partitionsFor = expansionSizing(spark, baseDir))
+      val (b3, _) = Bench.measure(spark, baseDir, reps = 3, eqs)
       baseShuffle = baseShuffle ++ drainShuffle(shuffleStats)
       autoSizePartitions(spark, workDir)
-      val (s3, _) = Bench.measure(spark, workDir, reps = 3, eqs,
-        partitionsFor = expansionSizing(spark, workDir))
+      val (s3, _) = Bench.measure(spark, workDir, reps = 3, eqs)
       scaledShuffle = scaledShuffle ++ drainShuffle(shuffleStats)
       // only rows whose BOTH sides re-measured get the reps:3 label — a
       // re-measure that failed (time cap) must not stamp a single-rep
@@ -418,11 +414,9 @@ object ScaleSmoke {
         case (b, t) => Some(s"""{"query":"$n",${(b.toSeq ++ t.toSeq).mkString(",")}}""")
       }
     }
-    // corpus bytes for BOTH sides ride the artifact so a reader (or
-    // GraftConf.expansionFactorsFrom) can compute shuffle-per-corpus-
-    // byte factors from the artifact ALONE — the round-19 verdict's
-    // staleness loop, closed: sizing can consume this file instead of
-    // a source-frozen snapshot of it
+    // corpus bytes for BOTH sides ride the artifact so a reader can
+    // compute shuffle-per-corpus-byte factors from the artifact ALONE
+    // (NOTES.md "Per-family shuffle expansion" is built from these fields)
     val corpusStanza =
       f""""base_corpus_mb":${corpusBytes(spark, baseDir) / 1048576.0}%.2f,""" +
         f""""scaled_corpus_mb":${corpusBytes(spark, workDir) / 1048576.0}%.2f"""
@@ -595,41 +589,11 @@ object ScaleSmoke {
         // the hot-skew factor multiplies the SIZED count, then re-clamps
         // under the same cap the sizing rule documents — factor x cap
         // must not punch through the task-overhead bound
-        val n = sizedWithFactor(bytes, cpus,
-          GraftConf.long(spark, "spark.graft.shuffle.targetBytesPerPartition",
-            GraftConf.DefaultShuffleTargetBytes), factor)
+        val n = sizedWithFactor(bytes, cpus, GraftConf.DefaultShuffleTargetBytes, factor)
         spark.conf.set("spark.sql.shuffle.partitions", n.toString)
         System.err.println(f"[scale-smoke] sized spark.sql.shuffle.partitions=$n " +
           f"for $dir (${bytes / 1024.0 / 1024.0}%.1f MiB corpus, factor $factor)")
         n
-    }
-
-  /** Per-query expansion-aware sizing hook for the fleet passes
-    * (`spark.graft.shuffle.expansionAware`, ON in the scale profile):
-    * each heavy family sizes `spark.sql.shuffle.partitions` from its
-    * MEASURED shuffle expansion × the corpus bytes
-    * ([[GraftConf.expansionSizedPartitions]]) instead of one
-    * corpus-level count for every family. At fixture scale every
-    * family lands on the same cpu floor the phase-level sizing picks
-    * (calibration in the GraftConf scaladoc — walls are unchanged); at
-    * TB scale the measured ×0.4–×62 spread differentiates counts. An
-    * explicit SPARK_GRAFT_SHUFFLE_PARTITIONS pin wins, as everywhere. */
-  private def expansionSizing(spark: SparkSession, dir: String): String => Option[Int] =
-    if (sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS") ||
-        !GraftConf.bool(spark, "spark.graft.shuffle.expansionAware", default = false))
-      _ => None
-    else {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-      val bytes = corpusBytes(spark, dir)
-      val tgt = GraftConf.long(spark,
-        "spark.graft.shuffle.targetShuffleBytesPerPartition",
-        GraftConf.DefaultTargetShuffleBytes)
-      // conf-gated artifact factors (spark.graft.shuffle
-      // .expansionArtifact) win over the source snapshot — resolved
-      // once per pass, not per query
-      val factors = GraftConf.activeExpansionFactors(spark)
-      q => Some(GraftConf.expansionSizedPartitions(q, bytes, cpus, tgt,
-        factors = factors))
     }
 
   /** The sized count x the hot-skew factor, RE-CLAMPED under the cap:

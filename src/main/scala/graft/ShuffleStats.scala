@@ -5,14 +5,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
 /** Per-query shuffle-byte accounting for the scale smoke — the
-  * instrumentation behind the NOTES "input → shuffle expansion" table.
+  * instrumentation behind NOTES.md's "Per-family shuffle expansion"
+  * table.
   *
-  * Why it exists: `spark.graft.shuffle.targetBytesPerPartition` (the
-  * 4 MiB/partition dial) was calibrated by A/B on ONE box; a deployment
-  * on different hardware re-derives its own target from the measured
-  * input-bytes → shuffle-bytes EXPANSION FACTOR of each heavy family —
-  * this listener makes that factor a per-round artifact instead of a
-  * hand-run estimate.
+  * Why it exists: the smoke's 4 MiB/partition sizing target
+  * ([[GraftConf.DefaultShuffleTargetBytes]]) was calibrated by A/B on
+  * ONE box; a deployment on different hardware re-derives its own
+  * target from the measured input-bytes → shuffle-bytes EXPANSION
+  * FACTOR of each heavy family — this listener makes that factor a
+  * per-round artifact instead of a hand-run estimate.
   *
   * Attribution rides the bench harness's own job groups:
   * [[Bench.measureDetailed]] wraps every rep in a unique
@@ -33,18 +34,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * snapshot, and crediting it to the next drain would misattribute one
   * pass's bytes to the other corpus — a small undercount beats a
   * cross-pass smear. */
-final class ShuffleStats(perStage: Boolean = false) extends SparkListener {
-  import ShuffleStats.{StageRow, Totals}
+final class ShuffleStats extends SparkListener {
+  import ShuffleStats.Totals
 
   private val stageGroup =
     scala.collection.concurrent.TrieMap.empty[Int, String]
   private val byGroup =
     scala.collection.concurrent.TrieMap.empty[String, Totals]
-  // per-stage rows (perStage mode only): the attribution layer below
-  // the per-query totals — which EXCHANGE carries the bytes, named by
-  // the stage's callsite (e.g. "persist at Dedup.scala:228")
-  private val stageRows =
-    new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
 
   override def onJobStart(j: SparkListenerJobStart): Unit = {
     val g = Option(j.properties)
@@ -61,22 +57,7 @@ final class ShuffleStats(perStage: Boolean = false) extends SparkListener {
       t.inputBytes.addAndGet(m.inputMetrics.bytesRead)
       t.shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       t.shuffleReadBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      if (perStage)
-        stageRows.add(StageRow(g, si.stageId, si.name,
-          m.inputMetrics.bytesRead, m.shuffleWriteMetrics.bytesWritten,
-          m.shuffleReadMetrics.totalBytesRead))
     }
-  }
-
-  /** Snapshot-and-clear the per-stage rows (perStage mode). Unlike
-    * [[drain]] this keeps EVERY rep's stages — callers aggregate by
-    * stage name (the callsite) to attribute a query's bytes to its
-    * exchanges. */
-  def drainStages(): Seq[StageRow] = {
-    val out = Seq.newBuilder[StageRow]
-    var r = stageRows.poll()
-    while (r != null) { out += r; r = stageRows.poll() }
-    out.result()
   }
 
   /** Snapshot-and-clear: per QUERY, the LAST completed rep's totals
@@ -104,24 +85,9 @@ object ShuffleStats {
     val shuffleReadBytes = new java.util.concurrent.atomic.AtomicLong(0)
   }
 
-  /** One completed stage's bytes under a bench group. `name` is Spark's
-    * stage name — the callsite string (`"<op> at <File.scala:line>"`)
-    * that makes the row self-attributing. */
-  final case class StageRow(group: String, stageId: Int, name: String,
-      inputBytes: Long, shuffleWriteBytes: Long, shuffleReadBytes: Long)
-
   /** Install on the context; returns the instance to [[ShuffleStats.drain]]. */
   def install(sc: SparkContext): ShuffleStats = {
     val s = new ShuffleStats
-    sc.addSparkListener(s)
-    s
-  }
-
-  /** [[install]] with per-stage retention — [[ShuffleStats.drainStages]]
-    * feeds the stage-level attribution read ([[graft.OrderProbe]]'s
-    * SPARK_GRAFT_STAGE_BYTES mode). */
-  def installPerStage(sc: SparkContext): ShuffleStats = {
-    val s = new ShuffleStats(perStage = true)
     sc.addSparkListener(s)
     s
   }

@@ -13,10 +13,11 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // fixture-scale state geometry: the operator default is
-      // defaultParallelism (the 100 TB-safe value); the harness pins the
-      // measured-best fixture count so tiny streams don't spin up a
-      // state store per core (see Streaming.scopedStateParts)
+      // fixture-scale state geometry: the operator default is the
+      // session's shuffle-partition count (the 100 TB-safe value); the
+      // harness pins the measured-best fixture count so tiny streams
+      // don't spin up a state store per core (see
+      // Streaming.scopedStateParts)
       .config("spark.graft.stream.statePartitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -48,8 +48,9 @@ object Dedup {
     * (geometry-stamped, see [[writeSignatureIndex]]), CC — is
     * geometry-agnostic. GeometrySpec pins the containment laws
     * (finer-banded geometries of the same width find supersets) and the
-    * default's bit-identity; GeometryProbe measures recall/cost at
-    * alternative geometries (NOTES.md). */
+    * default's bit-identity; the banding recall/cost of alternative
+    * geometries is measured in NOTES.md (Round-10 changes, the
+    * "geometry | width | banding recall" table). */
   private[graft] case class LshGeometry(bands: Int, rowsPerBand: Int) {
     /** signature slots = bands × rowsPerBand */
     val width: Int = bands * rowsPerBand
@@ -438,36 +439,6 @@ object Dedup {
       (0 until g.width).map(i => when(slotEq(i), 1).otherwise(0)).reduce(_ + _)
     else
       expr("size(filter(zip_with(x.sig, y.sig, (a, b) -> a = b), m -> m))")
-
-  /** Stage probes for [[graft.ClusterProfile]] — execute exactly the
-    * cluster pipeline's prefix stages so each stage's share of
-    * q_dedup_clusters (the catalog's most expensive query) is a measured
-    * number, not a guess. */
-  private[graft] def profileSignatures(s: SparkSession, d: String): Unit = {
-    val sigs = graft.CacheScope.track(signatures(s, d).persist())
-    sigs.count()
-    ()
-  }
-  private[graft] def profilePairs(s: SparkSession, d: String): Long =
-    minhashPairs(s, d).count()
-  private[graft] def profileCc(s: SparkSession, d: String): Int =
-    connectedComponentsWithRounds(minhashPairs(s, d))._2
-
-  /** PROBE-ONLY brute-force truth for LSH recall measurement
-    * ([[graft.GeometryProbe]]): every doc pair whose signatures agree on
-    * >= matchThreshold slots, with NO banding stage — the denominator of
-    * banding recall (the banded pair set is a subset by construction:
-    * same filter plus a collision requirement). All-pairs on purpose
-    * (nested-loop join); never a catalog path. */
-  private[graft] def bruteMinhashPairs(s: SparkSession, d: String): DataFrame = {
-    val g = lshGeometry(s)
-    val sigs = graft.CacheScope.track(signatures(s, d).persist())
-    sigs.count()
-    sigs.as("x").join(sigs.as("y"), col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-        matchCount(g).as("matches"))
-      .filter(col("matches") >= g.matchThreshold)
-  }
 
   /** The exactly-once minimal-band emission predicate: a (x, y) band-join
     * row at band `x.band` survives only if NO earlier band's slots all
@@ -1203,11 +1174,17 @@ object Dedup {
     // converges to) and skip the loop machinery entirely. Bounded the
     // way every driver-side probe in this engine is bounded
     // (`spark.graft.search.maxQueryTerms`, the IVF probed-cell
-    // collect): `spark.graft.cc.localMaxEdges` caps the collect (500k
-    // edges ≈ 8 MB on the driver; 0 disables), and a larger contracted
-    // graph — adversarial chain corpora at 100 TB — falls back to the
-    // pointer-doubling loop, which CcSpec still pins at O(log diameter)
-    // rounds with the conf forced to 0.
+    // collect): `spark.graft.cc.localMaxEdges` caps the collect (0
+    // disables), and a larger contracted graph — adversarial chain
+    // corpora at 100 TB — falls back to the pointer-doubling loop,
+    // which CcSpec still pins at O(log diameter) rounds with the conf
+    // forced to 0. Driver heap at the 500k default (64-bit JVM,
+    // compressed oops): each collected edge is a `GenericRow` with a
+    // 2-slot Object[] and two boxed Longs, ≈84 B → ≈42 MB; the boxed
+    // `HashMap` union-find holds ≤ 2 nodes per edge at ≈72 B each
+    // (node, two boxed Longs, table slot) → ≤ ≈72 MB; the (node, lbl)
+    // label list and its local relation add ≈100 B per node again —
+    // ≈200–250 MB worst case, not the edge bytes alone.
     val localMax = graft.GraftConf.int(s, "spark.graft.cc.localMaxEdges", 500000)
     require(localMax >= 0, "spark.graft.cc.localMaxEdges must be >= 0")
     val cCached = graft.CacheScope.track(cEdges.persist())
@@ -1478,15 +1455,6 @@ object Dedup {
     * candidates should stay within a small factor of the final pairs). */
   def ngramCandidateStats(s: SparkSession, d: String): (Long, Long) =
     (ngramCandidates(cachedShingles(s, d)).count(), dedupNgram(s, d).count())
-
-  /** Stage probes for [[graft.NgramProfile]] — execute exactly the
-    * query's first one / two stages so the verify stage's share of
-    * q_dedup_ngram is a measured number. */
-  private[graft] def profileShingles(s: SparkSession, d: String): Unit =
-    cachedShingles(s, d)
-  private[graft] def profileCandidates(s: SparkSession, d: String): Unit =
-    ngramCandidates(cachedShingles(s, d))
-      .write.mode("overwrite").format("noop").save()
 
   /** CONTAINMENT dedup — the asymmetric twin of [[dedupNgram]]: find
     * (contained, container) doc pairs where the contained doc's shingle

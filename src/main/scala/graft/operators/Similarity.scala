@@ -874,9 +874,9 @@ object Similarity {
     * one Spark job the union is the right granularity. */
   /** The probe frame (qid, qemb, qnrm, cell) and the distinct probed-
     * cell set for a query batch against a stored quantizer — the first
-    * half of [[knnFromIvfIndex]], shared with [[graft.IvfScaleProbe]]
-    * (the probed-vs-universe diagnostic) so the measured pruning
-    * fraction is the serving path's own numbers, not a re-derivation. */
+    * half of [[knnFromIvfIndex]]. The probed-vs-universe fractions in
+    * NOTES.md ("Round-17 IVF probed-vs-universe table") were measured
+    * through it, so they are the serving path's own numbers. */
   private[graft] def ivfProbes(queries: DataFrame, indexPath: String)
       : (DataFrame, Array[Int]) = {
     val nprobe = graft.GraftConf.int(queries.sparkSession,
@@ -886,11 +886,11 @@ object Similarity {
     ivfProbesN(queries, indexPath, nprobe)
   }
 
-  /** [[ivfProbes]] with an EXPLICIT nprobe, uncapped — the recall-sweep
-    * harness's entry ([[graft.RecallProbe]] measures recall@10 across
-    * nprobe 2/4/8). The catalog serving path stays behind the conf'd,
-    * [1, 2]-capped [[ivfProbes]]: the oracle replays nprobe=2 and the
-    * ServedPruningSpec INSET bound assumes it. */
+  /** [[ivfProbes]] with an EXPLICIT nprobe, uncapped — the entry of
+    * [[knnFromIvfIndexSwept]] (recall@10 across nprobe 2/4/8: NOTES.md
+    * "IVF cell-scaling QUALITY"). The catalog serving path stays
+    * behind the conf'd, [1, 2]-capped [[ivfProbes]]: the oracle
+    * replays nprobe=2 and the ServedPruningSpec INSET bound assumes it. */
   private[graft] def ivfProbesN(queries: DataFrame, indexPath: String,
       nprobe: Int): (DataFrame, Array[Int]) = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
@@ -921,8 +921,9 @@ object Similarity {
   }
 
   /** Measurement-only IVF serve with EXPLICIT nprobe and top-k, plus
-    * the probed-cell count — [[graft.RecallProbe]]'s recall@10 sweep
-    * across {16, ⌈√N⌉} cells × nprobe {2, 4, 8}. Not a catalog face:
+    * the probed-cell count — behind ScaleSmoke's recall-at-scale rows,
+    * IvfRecallGuardSpec, and NOTES.md's round-18 recall@10 table across
+    * {16, ⌈√N⌉} cells × nprobe {2, 4, 8}. Not a catalog face:
     * the oracle pins nprobe ≤ 2 / k = 3; recall-vs-nprobe guidance
     * needs the rest of the dial. */
   private[graft] def knnFromIvfIndexSwept(queries: DataFrame,
@@ -1080,7 +1081,8 @@ object Similarity {
     * the fingerprint; it rides the marker anyway so a human reading
     * the marker sees the trained shape.
     *
-    * QUALITY at the pinned nprobe=2 (RecallProbe round-18 sweep,
+    * QUALITY at the pinned nprobe=2 (NOTES.md round-18 "IVF
+    * cell-scaling QUALITY" table,
     * recall@10 vs brute ground truth on this face's own 30-query
     * batch): k=⌈√N⌉ reads 0.930 at sf0.1 (45 cells) and 0.953 at ×10
     * (142 cells) — ABOVE the 16-cell quantizer even at its nprobe=8
@@ -1143,9 +1145,9 @@ object Similarity {
     * runs, same (v1, v2) columns, same CC downstream. LSH recall at this
     * corpus's adversarial 0.35 threshold is low (SimilaritySpec measures
     * the cluster-level gap; at the 0.9-sim regime of true duplicates the
-    * banding recovers ≈93% — see RecallProbe), so the conf trades
-    * completeness for the n² → n·candidates collapse exactly like the
-    * `q_dedup_minhash`/`q_dedup_ngram` split. CC runs on the
+    * banding recovers ≈93% — NOTES.md, Round-7 changes), so the conf
+    * trades completeness for the n² → n·candidates collapse exactly
+    * like the `q_dedup_minhash`/`q_dedup_ngram` split. CC runs on the
     * pair-derived graph, orders of magnitude smaller than the corpus. */
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     val useLsh = graft.GraftConf.bool(s, "spark.graft.semdedup.lsh", default = false)

@@ -241,10 +241,14 @@ object Streaming {
     * independent; a production deployment sizes it to its executor
     * count exactly like every other state geometry dial.
     *
-    * The DEFAULT is `defaultParallelism`, not a constant: a 100 TB
-    * stream started without the conf would otherwise bottleneck every
-    * stateful operator on 8 state stores for the life of its checkpoint
-    * (the count is frozen at first start). The fixture entry points
+    * The DEFAULT is the session's `spark.sql.shuffle.partitions`, not
+    * a constant and not `defaultParallelism`: a 100 TB stream started
+    * without the conf would otherwise bottleneck every stateful
+    * operator on 8 state stores for the life of its checkpoint, and
+    * under dynamic allocation `defaultParallelism` can read 2 when the
+    * query first starts. Whatever value resolves is CAPTURED AT FIRST
+    * START — it is frozen into the checkpoint, and later conf changes
+    * do not re-partition existing state. The fixture entry points
     * (Bench, Verify) pin the conf to 8 explicitly — the measured-best
     * count at fixture volume, and the value that keeps driver bench
     * numbers comparable round-over-round — so small-scale timing floors
@@ -256,7 +260,7 @@ object Streaming {
     * seam for the spec that pins the scale-safe default). */
   private[graft] def resolvedStatePartitions(s: SparkSession): Int =
     graft.GraftConf.int(s, "spark.graft.stream.statePartitions",
-      s.sparkContext.defaultParallelism.max(1))
+      s.conf.get("spark.sql.shuffle.partitions").toInt)
 
   private def scopedStateParts[A](s: SparkSession)(body: => A): A = {
     val n = resolvedStatePartitions(s)

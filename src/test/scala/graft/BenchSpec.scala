@@ -88,25 +88,6 @@ class BenchSpec extends SparkFunSuite {
     assert(rep3.totalSec === 2.0 && !flag3)
   }
 
-  test("per-query shuffle-partition overrides do not leak between queries or out of the call") {
-    val entry = spark.conf.get("spark.sql.shuffle.partitions")
-    val seen = scala.collection.mutable.Map.empty[String, String]
-    val probe: String => (SparkSession, String) => DataFrame = name => (s, _) => {
-      seen(name) = s.conf.get("spark.sql.shuffle.partitions")
-      s.range(10).toDF("id")
-    }
-    val (_, failed) = Bench.measureDetailed(spark, sf, reps = 1,
-      Seq("q_a" -> probe("q_a"), "q_b" -> probe("q_b")),
-      partitionsFor = n => if (n == "q_a") Some(7) else None)
-    assert(failed.isEmpty)
-    assert(seen("q_a") === "7")
-    assert(seen("q_b") === entry,
-      "a query with no override must run at the session's entry count, " +
-        "not inherit the previous query's override")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === entry,
-      "the session must leave measureDetailed with the count it entered with")
-  }
-
   test("a query past the time cap is cancelled, fails by name, and skips its reps") {
     // a query whose tasks sleep far past the 1 s cap: if cancellation
     // didn't work, three reps would hold this test for ~3 minutes — the

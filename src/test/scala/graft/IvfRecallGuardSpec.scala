@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions.col
   * deterministic (first-k seeds, one Lloyd step, integer-exact centroid
   * means, fixed tie order), so a drop is a code regression, never
   * noise. The full measured table (× nprobe 2/4/8 × {sf0.1, ×10}) lives
-  * in NOTES.md via `runMain graft.RecallProbe`; this spec pins only the
-  * ordering the scaled face's scaladoc promises, at fixture scale. */
+  * in NOTES.md ("IVF cell-scaling QUALITY — recall@10 table", round
+  * 18); this spec pins only the ordering the scaled face's scaladoc
+  * promises, at fixture scale. */
 class IvfRecallGuardSpec extends SparkFunSuite {
   private val dir = "/root/testdata/sf0.01"
 

@@ -33,7 +33,6 @@ class ProfileSpec extends SparkFunSuite {
 
   test("the preset flips exactly the documented conf set") {
     assert(GraftConf.scaleDefaults.keySet === Set(
-      "spark.graft.shuffle.expansionAware",
       "spark.graft.lsh.maxBucket",
       "spark.graft.containment.maxDocsPerShingle",
       "spark.graft.semdedup.lsh",

@@ -53,137 +53,6 @@ class ShuffleSizingSpec extends AnyFunSuite {
     assert(GraftConf.sizedShufflePartitions(10L << 30, 32) === 2560)
   }
 
-  test("expansion-aware sizing: fixture floors, TB differentiation, legacy fallback") {
-    // round-19 calibration (GraftConf.ShuffleExpansionPerCorpusByte
-    // scaladoc). Fixture scale: even the heaviest measured factor (x62,
-    // containment) over the 11.4 MiB x10 smoke corpus stays under the
-    // cpu floor — fleet walls are unchanged by the feature
-    val x10 = 12L * 1024 * 1024
-    for (q <- GraftConf.ShuffleExpansionPerCorpusByte.keys)
-      assert(GraftConf.expansionSizedPartitions(q, x10, 32) === 32,
-        s"$q must stay on the floor at fixture scale")
-    // TB scale: counts scale with each family's MEASURED shuffle bytes,
-    // not one global assumption — at 10 GiB compressed corpus the x62
-    // containment family wants ~40x the partitions of the x0.8 winnow
-    // family (both uncapped at this size)
-    val tenGiB = 10L << 30
-    val heavy = GraftConf.expansionSizedPartitions("q_dedup_containment", tenGiB, 32,
-      cap = 1 << 20)
-    val light = GraftConf.expansionSizedPartitions("q_winnow_matches", tenGiB, 32,
-      cap = 1 << 20)
-    // against the SNAPSHOT factors (refreshed each round from the smoke
-    // artifact — hardcoding last round's values here is exactly the
-    // staleness the divergence guard below exists to kill)
-    val fHeavy = GraftConf.ShuffleExpansionPerCorpusByte("q_dedup_containment")
-    val fLight = GraftConf.ShuffleExpansionPerCorpusByte("q_winnow_matches")
-    assert(heavy === math.ceil(tenGiB * fHeavy / GraftConf.DefaultTargetShuffleBytes).toInt)
-    assert(light === math.ceil(tenGiB * fLight / GraftConf.DefaultTargetShuffleBytes).toInt)
-    assert(fHeavy / fLight > 10.0 &&
-      heavy > light * (fHeavy / fLight) * 0.9 && heavy < light * (fHeavy / fLight) * 1.1,
-      s"family differentiation lost: heavy=$heavy light=$light")
-    // the default cap still bounds everything
-    assert(GraftConf.expansionSizedPartitions("q_dedup_containment", tenGiB, 32)
-      === GraftConf.DefaultShufflePartitionCap)
-    // a family with NO measured factor sizes EXACTLY as the legacy
-    // input rule (16x expansion against the 64 MiB shuffle target is
-    // algebraically the 4 MiB input target)
-    for (bytes <- Seq(0L, 1L << 20, 123456789L, 10L << 30, 1L << 42))
-      assert(GraftConf.expansionSizedPartitions("q_unmeasured", bytes, 32)
-        === GraftConf.sizedShufflePartitions(bytes, 32),
-        s"legacy equivalence broke at $bytes bytes")
-  }
-
-  test("independent per-family ceilings: snapshot factors stay inside hardcoded absolute bounds") {
-    // The TB-differentiation test above reads the SNAPSHOT map, and the
-    // divergence guard below reads the ARTIFACT the same round refreshes
-    // the snapshot from — so a wrongly-refreshed factor could sail
-    // through both (round-20 verdict finding). These bounds are
-    // deliberately HARDCODED, not derived from either source: one
-    // absolute sanity ceiling/floor per family class, wide enough that
-    // honest re-measures never trip them, tight enough that an
-    // orders-of-magnitude refresh mistake (units, wrong denominator,
-    // swapped rows) fails CI by name. Update them only with a hand-checked
-    // measurement in the commit message.
-    val bounds = Map( // family -> (min, max) shuffle bytes per corpus byte
-      "q_dedup_containment" -> (20.0, 130.0),
-      "q_dedup_ngram" -> (15.0, 90.0),
-      "q_dedup_minhash" -> (8.0, 60.0),
-      "q_bm25_batch" -> (1.0, 25.0),
-      "q_bm25_batch_indexed" -> (1.0, 25.0),
-      "q_dedup_clusters" -> (0.5, 15.0),
-      "q_curation_pipeline" -> (2.0, 25.0),
-      "q_bpe_merges" -> (1.5, 20.0),
-      "q_span_dedup" -> (0.8, 12.0),
-      "q_winnow_contamination" -> (0.3, 6.0))
-    for ((q, (lo, hi)) <- bounds) {
-      val f = GraftConf.ShuffleExpansionPerCorpusByte(q)
-      assert(f >= lo && f <= hi,
-        s"$q snapshot factor $f outside its hardcoded sanity bound [$lo, $hi] " +
-          "— if the new measurement is real, update the bound by hand")
-    }
-  }
-
-  test("expansionFactorsFrom: parses the artifact, degrades to empty on every bad shape") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sizingspec_")
-    val p = dir.resolve("shuffle_profile.json")
-    // current format: factors = scaled_shuffle_write_mb / scaled_corpus_mb
-    java.nio.file.Files.writeString(p,
-      """{"phase":"shuffle_profile","base_corpus_mb":1.30,"scaled_corpus_mb":11.40,""" +
-        """"rows":[{"query":"q_a","scaled_input_mb":393.0,"scaled_shuffle_write_mb":701.5},""" +
-        """{"query":"q_b","base_shuffle_write_mb":1.0}]}""" + "\n")
-    val m = GraftConf.expansionFactorsFrom(p.toString)
-    assert(math.abs(m("q_a") - 701.5 / 11.4) < 1e-9)
-    assert(!m.contains("q_b"), "a row without a scaled side must be skipped, not zeroed")
-    // pre-round-20 format (no corpus field) → empty, never a guess from
-    // per-query input bytes (whose denominator is not the corpus)
-    java.nio.file.Files.writeString(p,
-      """{"phase":"shuffle_profile","rows":[{"query":"q_a","scaled_shuffle_write_mb":7.0}]}""")
-    assert(GraftConf.expansionFactorsFrom(p.toString) === Map.empty)
-    // absent / malformed → empty, never a throw
-    assert(GraftConf.expansionFactorsFrom(dir.resolve("absent.json").toString) === Map.empty)
-    java.nio.file.Files.writeString(p, "not json")
-    assert(GraftConf.expansionFactorsFrom(p.toString) === Map.empty)
-  }
-
-  test("artifact factors override the snapshot in sizing; absent families fall back") {
-    val tenGiB = 10L << 30
-    val measured = Map("q_dedup_containment" -> 31.0)
-    val fromArtifact = GraftConf.expansionSizedPartitions(
-      "q_dedup_containment", tenGiB, 32, cap = 1 << 20, factors = measured)
-    assert(fromArtifact ===
-      math.ceil(tenGiB * 31.0 / GraftConf.DefaultTargetShuffleBytes).toInt,
-      "sizing must consume the artifact factor, not the x62 snapshot")
-    // a family the artifact lacks still sizes from the snapshot
-    assert(GraftConf.expansionSizedPartitions(
-      "q_dedup_ngram", tenGiB, 32, cap = 1 << 20, factors = measured) ===
-      GraftConf.expansionSizedPartitions("q_dedup_ngram", tenGiB, 32, cap = 1 << 20))
-  }
-
-  test("snapshot-vs-artifact divergence guard: no stale factor survives >2x off the measured file") {
-    // the round-19 lesson: bm25's factor moved x37-44 -> x5-8 within ONE
-    // round's rework, and nothing failed. This guard reads the repo's
-    // standing SCALESMOKE_shuffle_latest.json; once it carries the
-    // corpus field (every round-20+ fleet run writes it), any snapshot
-    // entry >2x off the measured factor fails CI by name — refresh
-    // GraftConf.ShuffleExpansionPerCorpusByte from the artifact.
-    val measured = GraftConf.expansionFactorsFrom("SCALESMOKE_shuffle_latest.json")
-    assume(measured.nonEmpty,
-      "standing artifact predates the corpus field — guard arms on the next fleet run")
-    val drifted = GraftConf.ShuffleExpansionPerCorpusByte.toSeq.sorted.flatMap {
-      case (q, snap) => measured.get(q).collect {
-        // sub-2x factors are broadcast-regime noise (0.1 vs 0.25 is a
-        // rounding story, and both floor at fixture scale anyway): only
-        // families whose larger side is >= 2x corpus can mis-size
-        case meas if math.max(snap, meas) >= 2.0 &&
-          math.max(snap, meas) / math.min(snap, meas) > 2.0 =>
-          f"$q: snapshot $snap vs measured $meas%.1f"
-      }
-    }
-    assert(drifted.isEmpty,
-      s"stale expansion snapshot (refresh ShuffleExpansionPerCorpusByte " +
-        s"from the artifact): ${drifted.mkString("; ")}")
-  }
-
   test("the cap bounds task-count blowup; degenerate arguments fail fast by name") {
     assert(GraftConf.sizedShufflePartitions(1L << 50, 32) === 4096)
     assert(GraftConf.sizedShufflePartitions(1L << 50, 32, cap = 256) === 256)

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** [[ShuffleStats]] — the per-query shuffle-byte listener behind the
-  * NOTES input→shuffle expansion table. Integration-level on purpose:
+/** [[ShuffleStats]] — the per-query shuffle-byte listener behind
+  * NOTES.md's "Per-family shuffle expansion" table. Integration-level on purpose:
   * the contract is "a bench-grouped job's stage metrics land under its
   * query name", and that is only true end-to-end through Spark's real
   * listener bus + job-group plumbing. */

@@ -548,18 +548,27 @@ class StreamingSpec extends SparkFunSuite {
     }
   }
 
-  test("state partitions default to defaultParallelism, conf overrides") {
+  test("state partitions default to spark.sql.shuffle.partitions, conf overrides") {
     // The operator default must be the scale-safe value (a 100 TB stream
     // started without the conf must NOT freeze 8 state stores into its
-    // checkpoint); fixture entry points pin 8 explicitly in the harness.
+    // checkpoint, nor the 2 cores dynamic allocation may report at first
+    // start); fixture entry points pin 8 explicitly in the harness. The
+    // session's shuffle count is moved off defaultParallelism so the
+    // assertion tells the two sources apart.
     val key = "spark.graft.stream.statePartitions"
+    val shuffleKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.getOption(key)
+    val prevShuffle = spark.conf.getOption(shuffleKey)
+    val shuffleParts = spark.sparkContext.defaultParallelism + 3
     spark.conf.unset(key)
+    spark.conf.set(shuffleKey, shuffleParts.toString)
     try {
-      assert(Streaming.resolvedStatePartitions(spark)
-        === spark.sparkContext.defaultParallelism)
+      assert(Streaming.resolvedStatePartitions(spark) === shuffleParts)
       spark.conf.set(key, "8")
       assert(Streaming.resolvedStatePartitions(spark) === 8)
-    } finally restore(key, prev)
+    } finally {
+      restore(key, prev)
+      restore(shuffleKey, prevShuffle)
+    }
   }
 }
