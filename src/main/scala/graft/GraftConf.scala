@@ -12,19 +12,20 @@ import org.apache.spark.sql.SparkSession
   *     surfacing from deep inside a running job hours later.
   *
   *  2. **The `scale` profile.** The scale-correct behaviors are
-  *     individually conf-gated and default OFF so the DuckDB oracle gate
-  *     stays bit-identical — but a real deployment should not have to
-  *     discover and flip four-plus confs. `spark.graft.profile=scale`
-  *     layers [[scaleDefaults]] UNDER any explicitly-set conf: an
-  *     explicit `spark.graft.*` value always wins, the profile fills the
-  *     rest, and with no profile the hard defaults apply. The preset
-  *     deliberately bundles only SAFETY/PERF switches:
+  *     individually conf-gated. The hot-key guards are result-identical
+  *     on healthy input ([[graft.operators.HotKeyJoin]]) but stay off by
+  *     default until their counting pass is costed — and a real
+  *     deployment should not have to discover and flip four-plus confs.
+  *     `spark.graft.profile=scale` layers [[scaleDefaults]] UNDER any
+  *     explicitly-set conf: an explicit `spark.graft.*` value always wins,
+  *     the profile fills the rest, and with no profile the hard defaults
+  *     apply. The preset deliberately bundles only SAFETY/PERF switches:
   *
   *      - `spark.graft.lsh.maxBucket=10000` — degenerate-bucket guard on
-  *        all three LSH band joins. Result-identical on healthy input
-  *        (the adaptive probe runs the exact unguarded plan when no
-  *        bucket is hot); on pathological input it trades non-identical
-  *        hot-bucket near-dups for never going quadratic.
+  *        all four LSH band joins (MinHash and sign-LSH, one-shot and
+  *        ingest). Result-identical on healthy input; on pathological
+  *        input it trades non-identical hot-bucket near-dups for never
+  *        going quadratic.
   *      - `spark.graft.semdedup.lsh=true` — semantic dedup takes its
   *        pairs from the sub-quadratic banded-LSH path (the documented
   *        recall trade a real corpus runs; equals the oracle-gated

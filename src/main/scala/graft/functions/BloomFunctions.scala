@@ -19,13 +19,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomFunctions {
   def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    Registration.ensure(s, "graft_bloom_agg",
+      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
+    Registration.ensure(s, "graft_might_contain",
+      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
   }
 }

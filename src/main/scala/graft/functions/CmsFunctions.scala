@@ -49,6 +49,5 @@ case class CmsEstimate(left: Expression, right: Expression)
 
 object CmsFunctions {
   def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_estimate", exprs => CmsEstimate(exprs(0), exprs(1)), "built-in")
+    Registration.ensure(s, "graft_cms_estimate", exprs => CmsEstimate(exprs(0), exprs(1)))
 }

@@ -133,7 +133,5 @@ case class GramCountExplode(child: Expression, width: Expression)
 object GramCountExplode {
   /** Session-local registration (idempotent). */
   def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_count_explode", exprs => GramCountExplode(exprs(0), exprs(1)),
-      "built-in")
+    Registration.ensure(s, "gram_count_explode", exprs => GramCountExplode(exprs(0), exprs(1)))
 }

@@ -97,6 +97,5 @@ case class PostingExplode(child: Expression)
 object PostingExplode {
   /** Session-local registration (idempotent). */
   def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "posting_explode", exprs => PostingExplode(exprs(0)), "built-in")
+    Registration.ensure(s, "posting_explode", exprs => PostingExplode(exprs(0)))
 }

@@ -75,6 +75,5 @@ case class ShingleExplode(child: Expression, width: Expression)
 object ShingleExplode {
   /** Session-local registration (the extensions class also injects it). */
   def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_explode", exprs => ShingleExplode(exprs(0), exprs(1)), "built-in")
+    Registration.ensure(s, "shingle_explode", exprs => ShingleExplode(exprs(0), exprs(1)))
 }

@@ -176,16 +176,12 @@ case class DoubleVecDot(left: Expression, right: Expression)
 object VectorFunctions {
 
   /** Register `vec_dot` in the session's function registry (idempotent —
-    * createOrReplace). Must be called before using [[cosine]]/[[vecDot]]. */
+    * see [[Registration]]). Must be called before using [[cosine]]/[[vecDot]]. */
   def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_d", exprs => DoubleVecDot(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect", exprs => SortedLongIntersect(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dist2_d", exprs => DoubleVecDistSq(exprs(0), exprs(1)), "built-in")
+    Registration.ensure(s, "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)))
+    Registration.ensure(s, "vec_dot_d", exprs => DoubleVecDot(exprs(0), exprs(1)))
+    Registration.ensure(s, "sorted_intersect", exprs => SortedLongIntersect(exprs(0), exprs(1)))
+    Registration.ensure(s, "vec_dist2_d", exprs => DoubleVecDistSq(exprs(0), exprs(1)))
   }
 
   /** dot(a, b) over array<float> columns, in double precision. */

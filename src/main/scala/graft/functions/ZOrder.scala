@@ -66,6 +66,5 @@ object ZOrder {
   }
 
   def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder", exprs => ZOrder2(exprs(0), exprs(1)), "built-in")
+    Registration.ensure(s, "graft_zorder", exprs => ZOrder2(exprs(0), exprs(1)))
 }

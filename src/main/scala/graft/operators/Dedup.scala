@@ -306,11 +306,8 @@ object Dedup {
     pairsFromBands(bandsOf(sigs), lshMaxBucket(s))
   }
 
-  /** Conf-gated LSH hot-bucket cap (`spark.graft.lsh.maxBucket`); 0
-    * (default) = unguarded. Shared by the MinHash band join here and
-    * [[Similarity.embedNearDupLsh]]'s sign-LSH band join. A typo'd value
-    * fails fast naming the conf — not as a bare NumberFormatException
-    * from deep inside a job. */
+  /** LSH hot-bucket cap (`spark.graft.lsh.maxBucket`, 0 = unguarded) of
+    * all four band joins, MinHash and sign-LSH ([[HotKeyJoin]]). */
   private[operators] def lshMaxBucket(s: SparkSession): Int =
     graft.GraftConf.int(s, "spark.graft.lsh.maxBucket", 0)
 
@@ -333,15 +330,10 @@ object Dedup {
     * candidate pairs (that was ~10 s of the 17 s round-1 cost at sf0.1),
     * and the match filter prunes before any later shuffle.
     *
-    * cap > 0: the DEGENERATE-BUCKET guard — the one input-shape hazard
-    * of banded LSH at 100 TB. Real web corpora have hot buckets
-    * (empty/boilerplate docs collapsing to one band key); an m-doc
-    * bucket emits m²/2 candidates, so one 10⁶-doc bucket is 5·10¹¹
-    * pairs — the job that never finishes. The guard counts docs per
-    * (band, bucket), BROADCASTS the (tiny, ≤ corpus/cap rows) hot-key
-    * set, and:
-    *  - joins only COLD bucket rows pairwise (per-bucket cost ≤ cap²,
-    *    total ≤ cap · |rows| — linear in the corpus). Cross-band
+    * cap > 0: the [[HotKeyJoin]] guard on (band, bucket) — real web
+    * corpora have hot buckets (empty/boilerplate docs collapsing to one
+    * band key). When a bucket is hot it:
+    *  - joins only COLD bucket rows pairwise. Cross-band
     *    double-emissions are dropped by an explicit pair-level
     *    dropDuplicates (the minimal-band trick is unsound once a
     *    band's bucket can be missing from the join);
@@ -356,57 +348,31 @@ object Dedup {
     */
   private def pairsFromBands(bands: DataFrame, cap: Int): DataFrame = {
     val g = lshGeometry(bands.sparkSession)
-    def unguarded =
-      bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .filter(minimalBandOnly(g, col("x.band")))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-          matchCount(g).as("matches"))
-        .filter(col("matches") >= g.matchThreshold)
-    if (cap <= 0) unguarded
-    else {
-      // cached: the probe below plus the anti/semi broadcasts all read the
-      // (tiny — at most corpus/cap rows) hot-key frame
-      val hot = graft.CacheScope.track(
-        bands.groupBy(col("band"), col("bucket"))
-          .agg(count(lit(1)).as("bn")).filter(col("bn") > cap)
-          .select(col("band"), col("bucket")).persist())
-      // ADAPTIVE: one cheap scalar probe (limit-1 under the hood), and the
-      // healthy-input case — no degenerate bucket — runs the exact
-      // unguarded plan, which is SOUND precisely because nothing was
-      // excluded. The guard's steady-state cost with the conf on is one
-      // counting pass, not the 2.6× of always running the split plan
-      // (measured at sf0.1); the full machinery below only executes when
-      // it is actually saving the job from an m²/2 bucket.
-      if (hot.isEmpty) return unguarded
-      val cold = bands.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-      val coldPairs = cold.as("x").join(cold.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-          matchCount(g).as("matches"))
-        .filter(col("matches") >= g.matchThreshold)
-        .dropDuplicates("d1", "d2")
-      val allHotIds = bands
-        .join(broadcast(hot), Seq("band", "bucket"), "left_semi")
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("nh"))
-        .filter(col("nh") === g.bands)
-        .select(col("doc_id"))
-      // ',' delimiter: slot boundaries must survive the concat, or two
-      // distinct signatures could alias (["1","23"] vs ["12","3"]) and
-      // emit a false exact-duplicate edge on the guarded path
-      val keyed = bands.filter(col("band") === 0)
-        .join(allHotIds, "doc_id")
-        .select(col("doc_id"), md5(concat_ws(",", col("sig"))).as("k"))
-      val stars = keyed
-        .join(keyed.groupBy(col("k")).agg(min(col("doc_id")).as("rep")), "k")
-        .filter(col("doc_id") =!= col("rep"))
-        .select(col("rep").as("d1"), col("doc_id").as("d2"),
-          lit(g.width).as("matches"))
-      coldPairs.unionByName(stars)
+    def bandJoin(b: DataFrame) =
+      b.as("x").join(b.as("y"),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+        col("x.doc_id") < col("y.doc_id"))
+    def scored(j: DataFrame) = j
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+        matchCount(g).as("matches"))
+      .filter(col("matches") >= g.matchThreshold)
+    HotKeyJoin.hotKeys(bands, HotKeyJoin.BandKey, cap) match {
+      case None => scored(bandJoin(bands).filter(minimalBandOnly(g, col("x.band"))))
+      case Some(hot) =>
+        val coldPairs = scored(bandJoin(HotKeyJoin.cold(bands, hot, HotKeyJoin.BandKey)))
+          .dropDuplicates("d1", "d2")
+        val keyed = bands.filter(col("band") === 0)
+          .join(HotKeyJoin.allBandsHot(bands, hot, "doc_id", g.bands), "doc_id")
+          .select(col("doc_id"), sigKey.as("k"))
+        coldPairs.unionByName(HotKeyJoin.star(keyed, Seq("k"), "doc_id")
+          .select(col("rep").as("d1"), col("doc_id").as("d2"), lit(g.width).as("matches")))
     }
   }
+
+  /** Exact-identity key of a signature, the guards' star key. The ','
+    * delimiter keeps slot boundaries, or two distinct signatures could
+    * alias (["1","23"] vs ["12","3"]) into a false exact-duplicate edge. */
+  private val sigKey = md5(concat_ws(",", col("sig")))
 
   /** (band, bucket) keys per signature, per the session's [[lshGeometry]]
     * (default 2 bands × 4 rows — the expression this generates at the
@@ -514,50 +480,30 @@ object Dedup {
     // without it, a replay would flip every accepted doc to
     // is_new=false with matched_base = itself and the
     // keep-one-representative policy would drop the only copy.
-    def unguardedPairs =
-      base.as("x").join(broadcast(delta.as("y")),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-        .filter(minimalBandOnly(g, col("x.band")))
-        .select(col("x.doc_id").as("base_doc"), col("y.doc_id").as("delta_doc"),
-          matchCount(g).as("matches"))
-        .filter(col("matches") >= g.matchThreshold)
-    val pairs =
-      if (cap <= 0) unguardedPairs
-      else {
-        // hot cached: the probe + both broadcasts share it. The counting
-        // pass over the base/index itself is the guard's documented
-        // steady-state cost (one column-pruned scan per call).
-        val hot = graft.CacheScope.track(
-          base.groupBy(col("band"), col("bucket"))
-            .agg(count(lit(1)).as("bn")).filter(col("bn") > cap)
-            .select(col("band"), col("bucket")).persist())
-        if (hot.isEmpty) unguardedPairs // adaptive — see pairsFromBands
-        else {
-        val coldBase = base.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-        val coldPairs = coldBase.as("x").join(broadcast(delta.as("y")),
-            col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") =!= col("y.doc_id")) // replay self-match guard
-          .select(col("x.doc_id").as("base_doc"), col("y.doc_id").as("delta_doc"),
-            matchCount(g).as("matches"))
-          .filter(col("matches") >= g.matchThreshold)
+    def bandJoin(b: DataFrame) =
+      b.as("x").join(broadcast(delta.as("y")),
+        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+        col("x.doc_id") =!= col("y.doc_id")) // replay self-match guard
+    def scored(j: DataFrame) = j
+      .select(col("x.doc_id").as("base_doc"), col("y.doc_id").as("delta_doc"),
+        matchCount(g).as("matches"))
+      .filter(col("matches") >= g.matchThreshold)
+    // the guard's counting pass is one column-pruned scan of the base/index
+    val pairs = HotKeyJoin.hotKeys(base, HotKeyJoin.BandKey, cap) match {
+      case None => scored(bandJoin(base).filter(minimalBandOnly(g, col("x.band"))))
+      case Some(hot) =>
+        val coldPairs = scored(bandJoin(HotKeyJoin.cold(base, hot, HotKeyJoin.BandKey)))
           .dropDuplicates("base_doc", "delta_doc")
-        val hotIds = base.join(broadcast(hot), Seq("band", "bucket"), "left_semi")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("nh"))
-          .filter(col("nh") === g.bands)
-          .select(col("doc_id"))
-        // ',' delimiter — see pairsFromBands: undelimited concat lets
-        // distinct signatures alias into one identity key
-        val hotKeyed = base.filter(col("band") === 0).join(hotIds, "doc_id")
-          .select(col("doc_id").as("base_doc"), md5(concat_ws(",", col("sig"))).as("k"))
+        val hotKeyed = base.filter(col("band") === 0)
+          .join(HotKeyJoin.allBandsHot(base, hot, "doc_id", g.bands), "doc_id")
+          .select(col("doc_id").as("base_doc"), sigKey.as("k"))
         val deltaKeyed = delta.filter(col("band") === 0)
-          .select(col("doc_id").as("delta_doc"), md5(concat_ws(",", col("sig"))).as("k"))
+          .select(col("doc_id").as("delta_doc"), sigKey.as("k"))
         val hotPairs = hotKeyed.join(broadcast(deltaKeyed), "k")
           .filter(col("base_doc") =!= col("delta_doc")) // replay self-match guard
           .select(col("base_doc"), col("delta_doc"), lit(g.width).as("matches"))
         coldPairs.unionByName(hotPairs)
-        }
-      }
+    }
     val matched = pairs
       .groupBy(col("delta_doc"))
       .agg(min(col("base_doc")).as("matched_base"),
@@ -1480,10 +1426,8 @@ object Dedup {
     containmentPairsOf(cachedShingles(s, d), containmentMaxDocsPerShingle(s))
   }
 
-  /** Conf-gated containment hot-shingle cap
-    * (`spark.graft.containment.maxDocsPerShingle`); 0 (default, what the
-    * oracle replays) = unguarded. The scale profile sets 10000 — the
-    * same dial family as `lsh.maxBucket`/`winnow.maxDocsPerFp`. */
+  /** Containment hot-shingle cap
+    * (`spark.graft.containment.maxDocsPerShingle`, 0 = unguarded). */
   private[operators] def containmentMaxDocsPerShingle(s: SparkSession): Int =
     graft.GraftConf.int(s, "spark.graft.containment.maxDocsPerShingle", 0)
 
@@ -1502,26 +1446,24 @@ object Dedup {
     * cap <= 0: plain prefix-filtered candidate join (AllPairs lemma) —
     * what the DuckDB oracle replays.
     *
-    * cap > 0: the DEGENERATE-SHINGLE guard. The prefix filter protects
-    * against hot shingles only when they are NOT the rarest a doc has;
-    * a boilerplate group of m exact copies makes the copies' RAREST
-    * shingles themselves df = m hot, so every copy keeps them in its
-    * prefix and the candidate join emits m² pairs — the prefix lemma is
-    * powerless against identical sets (measured: the ScaleSmoke hot
-    * corpus' 20k-copy group is ~4·10⁸ candidates unguarded). The guard
-    * mirrors [[pairsFromBands]]:
-    *  - shingles with df > cap are counted once and BROADCAST; cold
-    *    candidate generation ranks prefixes over each doc's COLD
+    * cap > 0: the [[HotKeyJoin]] guard on the shingle. The prefix
+    * filter protects against hot shingles only when they are NOT the
+    * rarest a doc has; a boilerplate group of m exact copies makes the
+    * copies' RAREST shingles themselves df = m hot, so every copy keeps
+    * them in its prefix and the candidate join emits m² pairs — the
+    * prefix lemma is powerless against identical sets (measured: the
+    * ScaleSmoke hot corpus' 20k-copy group is ~4·10⁸ candidates
+    * unguarded). When a shingle has df > cap:
+    *  - cold candidate generation ranks prefixes over each doc's COLD
     *    shingles (global-df order, full-set prefix bound) and joins
-    *    cold postings only — per-shingle fan-out ≤ cap;
+    *    cold postings only;
     *  - docs with NO cold shingle route to the exact-set star path:
     *    group by (source, md5 of the full shingle array), emit member →
     *    min-doc edges with containment 1.0 (g − 1 edges, no recall loss
     *    for true copies: an identical group bigger than cap is hot in
     *    every shingle). Hot-shingle pairs that are NOT identical sets
     *    are dropped — the documented recall trade, same as the LSH
-    *    guard's. Adaptive: a healthy corpus (no hot shingle) runs the
-    *    exact unguarded plan after one cheap counting probe. */
+    *    guard's. */
   private def containmentPairsOf(sh: DataFrame, cap: Int): DataFrame =
     containmentPairsCore(sh, cap)
       .orderBy(col("contained_id"), col("container_id"))
@@ -1586,27 +1528,23 @@ object Dedup {
       .select(col("d1").as("contained_id"), col("d2").as("container_id"),
         col("inter"),
         (col("inter").cast("double") / col("n1")).as("containment"))
-    if (cap <= 0) return verified(candidatesFrom(exploded))
-    val hot = graft.CacheScope.track(
-      freq.filter(col("df") > cap).select(col("sh")).persist())
-    if (hot.isEmpty) return verified(candidatesFrom(exploded))
-    val cold = exploded.join(broadcast(hot), Seq("sh"), "left_anti")
-    val coldPairs = verified(candidatesFrom(cold))
-    // docs with no cold shingle vanish from the join above; identical
-    // sets among them star to the group minimum (containment exactly 1)
-    val keyed = sh.filter(size(col("shingles")) > 0)
-      .join(cold.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"),
-        size(col("shingles")).cast("long").as("inter"),
-        expr("md5(array_join(transform(shingles, x -> CAST(x AS STRING)), ','))")
-          .as("k"))
-    val stars = keyed
-      .join(keyed.groupBy(col("source"), col("k"))
-        .agg(min(col("doc_id")).as("rep")), Seq("source", "k"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("contained_id"), col("rep").as("container_id"),
-        col("inter"), lit(1.0).as("containment"))
-    coldPairs.unionByName(stars)
+    HotKeyJoin.hotKeys(exploded, Seq("sh"), cap) match {
+      case None => verified(candidatesFrom(exploded))
+      case Some(hot) =>
+        val cold = HotKeyJoin.cold(exploded, hot, Seq("sh"))
+        // docs with no cold shingle vanish from the cold join; identical
+        // sets among them star to the group minimum (containment exactly 1)
+        val keyed = sh.filter(size(col("shingles")) > 0)
+          .join(cold.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("source"),
+            size(col("shingles")).cast("long").as("inter"),
+            expr("md5(array_join(transform(shingles, x -> CAST(x AS STRING)), ','))")
+              .as("k"))
+        verified(candidatesFrom(cold)).unionByName(
+          HotKeyJoin.star(keyed, Seq("source", "k"), "doc_id")
+            .select(col("doc_id").as("contained_id"), col("rep").as("container_id"),
+              col("inter"), lit(1.0).as("containment")))
+    }
   }
 
   /** Repeated-SPAN profile — the data side of exact-substring dedup

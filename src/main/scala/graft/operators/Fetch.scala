@@ -115,7 +115,9 @@ object Fetch {
 
   /** One fetch per row: `fetch_blob` returns a (payload, error) struct —
     * exactly one field non-null — via the plain scalar-UDF surface,
-    * nondeterministic by construction. */
+    * nondeterministic by construction. It re-registers on every call,
+    * unlike the engine's other functions: the UDF captures [[transport]]
+    * at registration, so a swapped transport needs a fresh one. */
   def registerUdfs(s: SparkSession): Unit = {
     val t = transport
     s.udf.register("fetch_blob",

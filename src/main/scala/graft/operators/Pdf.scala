@@ -153,11 +153,12 @@ object Pdf {
   /** Plain scalar-UDF registration surface (SURVEY.md §2.2): the artifact
     * transforms + the reference-dispatch, usable from `spark.sql`. */
   def registerUdfs(s: SparkSession): Unit = {
-    s.udf.register("synth_pdf", (p: String, e: Boolean, c: Boolean) => PdfOps.synthPdf(p, e, c))
-    s.udf.register("pdf_to_text", (b: Array[Byte]) => PdfOps.toText(b))
-    s.udf.register("pdf_to_html", (b: Array[Byte]) => PdfOps.toHtml(b))
-    s.udf.register("pdf_to_image", (b: Array[Byte]) => PdfOps.toImagePng(b))
-    s.udf.register("pdf_convert", (b: Array[Byte], op: String) => PdfOps.convert(b, op))
+    import graft.functions.Registration.ensureUdf
+    ensureUdf(s, "synth_pdf", udf((p: String, e: Boolean, c: Boolean) => PdfOps.synthPdf(p, e, c)))
+    ensureUdf(s, "pdf_to_text", udf((b: Array[Byte]) => PdfOps.toText(b)))
+    ensureUdf(s, "pdf_to_html", udf((b: Array[Byte]) => PdfOps.toHtml(b)))
+    ensureUdf(s, "pdf_to_image", udf((b: Array[Byte]) => PdfOps.toImagePng(b)))
+    ensureUdf(s, "pdf_convert", udf((b: Array[Byte], op: String) => PdfOps.convert(b, op)))
   }
 
   /** O12–O14 for real: synthesize → convert via PDFBox → error taxonomy.

@@ -590,61 +590,34 @@ object Similarity {
   /** [[embedNearDupLsh]] over an arbitrary (vec_id, embedding) frame with
     * an explicit hot-bucket cap — the seam SimilaritySpec's adversarial
     * fixture drives. cap <= 0 = unguarded (the oracle's semantics);
-    * cap > 0 applies the same ADAPTIVE degenerate-bucket guard as
-    * [[Dedup]]'s MinHash band join: per-(band, bucket) counts, exact
-    * unguarded plan when nothing exceeds the cap, otherwise hot keys
-    * broadcast, cold rows joined pairwise (per-bucket ≤ cap² — linear in
-    * the corpus), and vectors hot in ALL 8 bands routed to the exact
-    * md5-equality path as a STAR to each identical-vector group's min id
-    * (identical vectors share every bucket, so a group bigger than cap
-    * is hot everywhere and keeps full recall; non-identical hot-bucket
-    * pairs are the documented recall trade). Star candidates still flow
-    * through the exact cosine verification below, so emitted sims are
-    * computed, never assumed. When the guard trips, `bands` and `hot`
-    * are cached (CacheScope) — the guarded plan reads them from 5
-    * branches, and this is exactly the huge-corpus case. */
+    * cap > 0 applies the [[HotKeyJoin]] guard on (band, bucket): cold
+    * rows joined pairwise, and vectors hot in ALL 8 bands routed to the
+    * exact md5-equality path as a STAR to each identical-vector group's
+    * min id (identical vectors share every bucket, so a group bigger than
+    * cap is hot everywhere and keeps full recall; non-identical
+    * hot-bucket pairs are the documented recall trade). Star candidates
+    * still flow through the exact cosine verification below, so emitted
+    * sims are computed, never assumed. */
   private[graft] def embedNearDupLshOf(e: DataFrame, cap: Int): DataFrame = {
     graft.functions.VectorFunctions.register(e.sparkSession)
-    val bands0 = signBands(e)
-    def unguardedCands(bands: DataFrame) =
-      bands.as("a")
-        .join(bands.as("b"),
+    // the guarded plan reads bands from up to 5 branches — pinned (one
+    // explode over the corpus) instead of re-derived per branch
+    val bands = HotKeyJoin.pinned(signBands(e), cap)
+    def bandJoin(b: DataFrame) =
+      b.as("a")
+        .join(b.as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
             col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
-    val rawCands =
-      if (cap <= 0) unguardedCands(bands0)
-      else {
-        // the guarded plan reads bands from up to 5 branches and the hot
-        // keys from 3 — cache both (tiny hot frame; bands = one explode
-        // over the corpus) instead of re-deriving per branch
-        val bands = graft.CacheScope.track(bands0.persist())
-        val hot = graft.CacheScope.track(
-          bands.groupBy(col("band"), col("bucket"))
-            .agg(count(lit(1)).as("bn")).filter(col("bn") > cap)
-            .select(col("band"), col("bucket")).persist())
-        if (hot.isEmpty) unguardedCands(bands) // adaptive — see Dedup.pairsFromBands
-        else {
-        val cold = bands.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-        val coldCands = cold.as("a")
-          .join(cold.as("b"),
-            col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
-        val allHotIds = bands
-          .join(broadcast(hot), Seq("band", "bucket"), "left_semi")
-          .groupBy(col("vec_id")).agg(count(lit(1)).as("nh"))
-          .filter(col("nh") === 8)
-          .select(col("vec_id"))
-        val keyed = allHotIds.join(e, "vec_id")
+    val rawCands = HotKeyJoin.hotKeys(bands, HotKeyJoin.BandKey, cap) match {
+      case None => bandJoin(bands)
+      case Some(hot) =>
+        val keyed = HotKeyJoin.allBandsHot(bands, hot, "vec_id", 8).join(e, "vec_id")
           .select(col("vec_id"), embedKey.as("k"))
-        val stars = keyed
-          .join(keyed.groupBy(col("k")).agg(min(col("vec_id")).as("rep")), "k")
-          .filter(col("vec_id") =!= col("rep"))
-          .select(col("rep").as("v1"), col("vec_id").as("v2"))
-        coldCands.unionByName(stars)
-        }
-      }
+        bandJoin(HotKeyJoin.cold(bands, hot, HotKeyJoin.BandKey)).unionByName(
+          HotKeyJoin.star(keyed, Seq("k"), "vec_id")
+            .select(col("rep").as("v1"), col("vec_id").as("v2")))
+    }
     val cands = rawCands.distinct()
     val withVec = cands
       .join(e.select(col("vec_id").as("v1"), col("embedding").as("e1"),
@@ -667,7 +640,7 @@ object Similarity {
     * assumed), and each delta vector reports its canonical base match
     * (min vec_id at sim ≥ 0.35), its base near-dup count, the best
     * similarity, and an is_new flag — the admission decision of a
-    * vector-dedup ingest pipeline. Honors the same adaptive
+    * vector-dedup ingest pipeline. Honors the same
     * `spark.graft.lsh.maxBucket` hot-bucket guard as every other band
     * join (hot base buckets leave the join; delta vectors still find
     * exact-identical base vectors through the md5-equality path). */
@@ -695,38 +668,23 @@ object Similarity {
     // bv != dv: a replayed micro-batch (at-least-once foreachBatch) whose
     // accepted vectors already reached the index must not self-match —
     // see the same guard in Dedup.incrementalMatch.
-    def unguardedCands =
-      baseBands.as("a").join(broadcast(db.as("b")),
+    def bandJoin(b: DataFrame) =
+      b.as("a").join(broadcast(db.as("b")),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
             col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("bv"), col("b.vec_id").as("dv"))
-    val rawCands =
-      if (cap <= 0) unguardedCands
-      else {
-        val hot = graft.CacheScope.track(
-          baseBands.groupBy(col("band"), col("bucket"))
-            .agg(count(lit(1)).as("bn")).filter(col("bn") > cap)
-            .select(col("band"), col("bucket")).persist())
-        if (hot.isEmpty) unguardedCands // adaptive — see Dedup.pairsFromBands
-        else {
-          val cold = baseBands.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-          val coldCands = cold.as("a").join(broadcast(db.as("b")),
-              col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-                col("a.vec_id") =!= col("b.vec_id"))
-            .select(col("a.vec_id").as("bv"), col("b.vec_id").as("dv"))
-          val allHotIds = baseBands
-            .join(broadcast(hot), Seq("band", "bucket"), "left_semi")
-            .groupBy(col("vec_id")).agg(count(lit(1)).as("nh"))
-            .filter(col("nh") === 8).select(col("vec_id"))
-          val hotKeyed = allHotIds.join(baseVecs, "vec_id")
-            .select(col("vec_id").as("bv"), embedKey.as("k"))
-          val deltaKeyed = delta.select(col("vec_id").as("dv"), embedKey.as("k"))
-          val hotCands = hotKeyed.join(broadcast(deltaKeyed), "k")
-            .filter(col("bv") =!= col("dv")) // replay self-match guard
-            .select(col("bv"), col("dv"))
-          coldCands.unionByName(hotCands)
-        }
-      }
+    val rawCands = HotKeyJoin.hotKeys(baseBands, HotKeyJoin.BandKey, cap) match {
+      case None => bandJoin(baseBands)
+      case Some(hot) =>
+        val hotKeyed = HotKeyJoin.allBandsHot(baseBands, hot, "vec_id", 8)
+          .join(baseVecs, "vec_id")
+          .select(col("vec_id").as("bv"), embedKey.as("k"))
+        val deltaKeyed = delta.select(col("vec_id").as("dv"), embedKey.as("k"))
+        val hotCands = hotKeyed.join(broadcast(deltaKeyed), "k")
+          .filter(col("bv") =!= col("dv")) // replay self-match guard
+          .select(col("bv"), col("dv"))
+        bandJoin(HotKeyJoin.cold(baseBands, hot, HotKeyJoin.BandKey)).unionByName(hotCands)
+    }
     val withVec = rawCands.distinct()
       .join(baseVecs.select(col("vec_id").as("bv"), col("embedding").as("e1"),
         sqrt(expr("vec_dot(embedding, embedding)")).as("n1")), "bv")

@@ -220,6 +220,20 @@ object TextAnalysis {
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
   }
 
+  /** (`winnow.minShared`, `winnow.maxDocsPerFp`) of every winnow pair face. */
+  private def winnowPairConfs(s: SparkSession): (Int, Int) = {
+    val minShared = graft.GraftConf.int(s, "spark.graft.winnow.minShared", 3)
+    require(minShared >= 1, "winnow.minShared must be >= 1")
+    (minShared, graft.GraftConf.int(s, "spark.graft.winnow.maxDocsPerFp", 0))
+  }
+
+  /** `winnow.evalMod`: eval docs are `doc_id % evalMod = 0`. */
+  private def winnowEvalMod(s: SparkSession): Int = {
+    val evalMod = graft.GraftConf.int(s, "spark.graft.winnow.evalMod", 7)
+    require(evalMod >= 2, "winnow.evalMod must be >= 2")
+    evalMod
+  }
+
   /** Fingerprint MATCH candidates: document pairs sharing ≥
     * `spark.graft.winnow.minShared` (3) distinct winnowed fingerprints
     * — MOSS's own pair report, and the span-contamination shortlist a
@@ -227,24 +241,17 @@ object TextAnalysis {
     * equi-join on the fingerprint value — the inverted-index family
     * (one exchange keyed by fp, partial-agg'd pair counts).
     *
-    * A boilerplate fingerprint shared by millions of docs is the same
-    * hot-key shape as an LSH hot bucket — an m-doc fingerprint emits
-    * m²/2 pairs. `spark.graft.winnow.maxDocsPerFp` (0 = unguarded, the
-    * oracle default; 10000 under the `scale` profile) is the
-    * degenerate-key guard: count docs per fp, DROP fingerprints hotter
-    * than the cap from the pairwise join entirely. Dropping (not
+    * `spark.graft.winnow.maxDocsPerFp` (0 = unguarded; 10000 under the
+    * `scale` profile) is the [[HotKeyJoin]] guard on fp: a boilerplate
+    * fingerprint hotter than the cap is DROPPED from the join. Dropping (not
     * star-routing, as LSH does) is MOSS's own move — the paper ignores
     * fingerprints appearing in many submissions as boilerplate, since
     * a fragment shared by thousands of documents identifies no
     * specific pair. Hot fps no longer count toward n_shared — the
-    * documented recall trade for never going quadratic. The adaptive
-    * probe ([[Dedup]]'s pattern) runs the EXACT unguarded plan when no
-    * fingerprint is hot, so healthy corpora pay one counting pass and
-    * lose nothing (WinnowGuardSpec pins the cold-path set equality). */
+    * documented recall trade for never going quadratic (WinnowGuardSpec
+    * pins the cold-path set equality). */
   def winnowMatches(s: SparkSession, d: String): DataFrame = {
-    val minShared = graft.GraftConf.int(s, "spark.graft.winnow.minShared", 3)
-    require(minShared >= 1, "winnow.minShared must be >= 1")
-    val cap = graft.GraftConf.int(s, "spark.graft.winnow.maxDocsPerFp", 0)
+    val (minShared, cap) = winnowPairConfs(s)
     winnowMatchesOf(winnowSelected(s, d), minShared, cap)
   }
 
@@ -261,17 +268,11 @@ object TextAnalysis {
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
         .orderBy(col("d1"), col("d2"))
-    if (cap <= 0) pairsOf(fps)
-    else {
-      // the distinct'd fp frame feeds both the hot probe and the join —
-      // persist so the guard's counting pass isn't a second corpus scan
-      val cached = graft.CacheScope.track(fps.persist())
-      val hot = graft.CacheScope.track(
-        cached.groupBy(col("fp")).agg(count(lit(1)).as("n"))
-          .filter(col("n") > cap).select(col("fp")).persist())
-      // adaptive: healthy input (no hot fp) runs the exact unguarded plan
-      if (hot.isEmpty) pairsOf(cached)
-      else pairsOf(cached.join(broadcast(hot), Seq("fp"), "left_anti"))
+    // pinned: the guard's counting pass must not be a second corpus scan
+    val pinned = HotKeyJoin.pinned(fps, cap)
+    HotKeyJoin.hotKeys(pinned, Seq("fp"), cap) match {
+      case None => pairsOf(pinned)
+      case Some(hot) => pairsOf(HotKeyJoin.cold(pinned, hot, Seq("fp")))
     }
   }
 
@@ -301,13 +302,10 @@ object TextAnalysis {
     * so a fp hot on EITHER side blows up: `spark.graft.winnow
     * .maxDocsPerFp` counts over the two sides COMBINED and drops hot
     * fingerprints from both (same MOSS boilerplate-elimination trade
-    * and adaptive cold-path identity as [[winnowMatches]]). */
+    * as [[winnowMatches]]). */
   def winnowContamination(s: SparkSession, d: String): DataFrame = {
-    val minShared = graft.GraftConf.int(s, "spark.graft.winnow.minShared", 3)
-    require(minShared >= 1, "winnow.minShared must be >= 1")
-    val cap = graft.GraftConf.int(s, "spark.graft.winnow.maxDocsPerFp", 0)
-    val evalMod = graft.GraftConf.int(s, "spark.graft.winnow.evalMod", 7)
-    require(evalMod >= 2, "winnow.evalMod must be >= 2")
+    val (minShared, cap) = winnowPairConfs(s)
+    val evalMod = winnowEvalMod(s)
     val docs = docsW(s, d)
     winnowContaminationOf(
       winnowSelectedOf(s, docs.filter(col("doc_id") % evalMod === 0)),
@@ -341,18 +339,12 @@ object TextAnalysis {
           min(col("t.first_pos")).as("train_first"))
         .filter(col("n_shared") >= minShared)
         .orderBy(col("eval_id"), col("train_id"))
-    if (cap <= 0) pairsOf(e, t)
-    else {
-      val ec = graft.CacheScope.track(e.persist())
-      val tc = graft.CacheScope.track(t.persist())
-      val hot = graft.CacheScope.track(
-        ec.select(col("fp")).union(tc.select(col("fp")))
-          .groupBy(col("fp")).agg(count(lit(1)).as("n"))
-          .filter(col("n") > cap).select(col("fp")).persist())
-      if (hot.isEmpty) pairsOf(ec, tc)
-      else pairsOf(
-        ec.join(broadcast(hot), Seq("fp"), "left_anti"),
-        tc.join(broadcast(hot), Seq("fp"), "left_anti"))
+    val ec = HotKeyJoin.pinned(e, cap)
+    val tc = HotKeyJoin.pinned(t, cap)
+    HotKeyJoin.hotKeys(ec.select(col("fp")).union(tc.select(col("fp"))), Seq("fp"), cap) match {
+      case None => pairsOf(ec, tc)
+      case Some(hot) =>
+        pairsOf(HotKeyJoin.cold(ec, hot, Seq("fp")), HotKeyJoin.cold(tc, hot, Seq("fp")))
     }
   }
 
@@ -445,9 +437,7 @@ object TextAnalysis {
   def contaminationFromIndex(evalDocs: DataFrame, indexPath: String): DataFrame = {
     val s = evalDocs.sparkSession
     requireWinnowMeta(s, indexPath)
-    val minShared = graft.GraftConf.int(s, "spark.graft.winnow.minShared", 3)
-    require(minShared >= 1, "winnow.minShared must be >= 1")
-    val cap = graft.GraftConf.int(s, "spark.graft.winnow.maxDocsPerFp", 0)
+    val (minShared, cap) = winnowPairConfs(s)
     val e = graft.CacheScope.track(
       sideFps(winnowSelectedOf(s, evalDocs)).persist())
     val buckets = e.select(winnowBucketCol.as("b")).distinct()
@@ -486,9 +476,7 @@ object TextAnalysis {
       indexPath: String): DataFrame = {
     val s = batch.sparkSession
     requireWinnowMeta(s, indexPath)
-    val minShared = graft.GraftConf.int(s, "spark.graft.winnow.minShared", 3)
-    require(minShared >= 1, "winnow.minShared must be >= 1")
-    val cap = graft.GraftConf.int(s, "spark.graft.winnow.maxDocsPerFp", 0)
+    val (minShared, cap) = winnowPairConfs(s)
     val sel = Dedup.truncateLineage(winnowSelectionOf(batch))
     val report = contaminationPairs(evalSel, sel, minShared, cap)
     val fresh = sel.join(
@@ -528,14 +516,13 @@ object TextAnalysis {
     * 1e6 under the scale profile) drops pairs whose raw match count
     * exceeds the cap from the SPAN report — they remain flagged by the
     * contamination gate itself; only their span enumeration is
-    * declined (documented MOSS-style trade, adaptive like its
-    * siblings: no hot pair → the exact unguarded plan). */
+    * declined (documented MOSS-style trade; [[HotKeyJoin]] keyed on
+    * the pair). */
   def contaminationSpans(s: SparkSession, d: String): DataFrame = {
     val minRun = graft.GraftConf.int(s, "spark.graft.winnow.spanMinRun", 12)
     require(minRun >= 1, "winnow.spanMinRun must be >= 1")
     val cap = graft.GraftConf.long(s, "spark.graft.winnow.maxSpanMatchesPerPair", 0L)
-    val evalMod = graft.GraftConf.int(s, "spark.graft.winnow.evalMod", 7)
-    require(evalMod >= 2, "winnow.evalMod must be >= 2")
+    val evalMod = winnowEvalMod(s)
     val docs = docsW(s, d)
     contaminationSpansOf(
       winnowContamination(s, d).select(col("eval_id"), col("train_id")),
@@ -573,16 +560,11 @@ object TextAnalysis {
         col("eval_start"), col("train_start"), col("run_len"))
       .orderBy(col("eval_id"), col("train_id"),
         col("eval_start"), col("train_start"))
-    if (cap <= 0) spansOf(m)
-    else {
-      val mc = graft.CacheScope.track(m.persist())
-      val hot = graft.CacheScope.track(
-        mc.groupBy(col("eval_id"), col("train_id"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > cap)
-          .select(col("eval_id"), col("train_id")).persist())
-      if (hot.isEmpty) spansOf(mc)
-      else spansOf(mc.join(broadcast(hot),
-        Seq("eval_id", "train_id"), "left_anti"))
+    val mc = HotKeyJoin.pinned(m, cap)
+    val pair = Seq("eval_id", "train_id")
+    HotKeyJoin.hotKeys(mc, pair, cap) match {
+      case None => spansOf(mc)
+      case Some(hot) => spansOf(HotKeyJoin.cold(mc, hot, pair))
     }
   }
 
@@ -590,8 +572,7 @@ object TextAnalysis {
     * from the files — same oracle as the scan-side
     * [[winnowContamination]] (the persisted hop must be invisible). */
   def winnowContaminationIndexed(s: SparkSession, d: String): DataFrame = {
-    val evalMod = graft.GraftConf.int(s, "spark.graft.winnow.evalMod", 7)
-    require(evalMod >= 2, "winnow.evalMod must be >= 2")
+    val evalMod = winnowEvalMod(s)
     val path = graft.TempDirs.freshUnder("graft_winnowidx_",
       graft.TempDirs.sessionKey(s, d), "train").toString
     val docs = docsW(s, d)
@@ -619,8 +600,7 @@ object TextAnalysis {
     * `maxDocsPerFp`) don't touch index content — correctly absent.
     * Same oracle as `q_winnow_contamination`, verbatim. */
   def winnowContaminationServed(s: SparkSession, d: String): DataFrame = {
-    val evalMod = graft.GraftConf.int(s, "spark.graft.winnow.evalMod", 7)
-    require(evalMod >= 2, "winnow.evalMod must be >= 2")
+    val evalMod = winnowEvalMod(s)
     val fp = graft.Tables.filesFingerprint(s, d, "documents") +
       s"|evalMod=$evalMod" +
       s":k=${graft.GraftConf.int(s, "spark.graft.winnow.gram", 5)}" +

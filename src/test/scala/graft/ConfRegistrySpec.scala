@@ -31,11 +31,6 @@ class ConfRegistrySpec extends SparkFunSuite {
       s"registered keys no source line reads (stale registry): $dead")
   }
 
-  private def restore(key: String, prev: Option[String]): Unit = prev match {
-    case Some(v) => spark.conf.set(key, v)
-    case None => spark.conf.unset(key)
-  }
-
   test("requireKnown rejects a typo'd conf by name and accepts known keys") {
     // a typo'd case, then the four shuffle-sizing keys the engine no
     // longer reads: a deployment still setting one must learn at once
@@ -46,23 +41,16 @@ class ConfRegistrySpec extends SparkFunSuite {
         "spark.graft.shuffle.expansionArtifact",
         "spark.graft.shuffle.targetBytesPerPartition",
         "spark.graft.shuffle.targetShuffleBytesPerPartition")) {
-      val prev = spark.conf.getOption(bad)
-      spark.conf.set(bad, "1")
-      try {
+      withConf(bad -> "1") {
         val e = intercept[IllegalArgumentException] {
           GraftConf.requireKnown(spark)
         }
         assert(e.getMessage.contains(bad), s"$bad not named: ${e.getMessage}")
-      } finally restore(bad, prev)
+      }
     }
-    val prevFp = spark.conf.getOption("spark.graft.winnow.maxDocsPerFp")
-    val prevProfile = spark.conf.getOption("spark.graft.profile")
-    spark.conf.set("spark.graft.winnow.maxDocsPerFp", "10000")
-    spark.conf.set("spark.graft.profile", "scale")
-    try GraftConf.requireKnown(spark) // must not throw
-    finally {
-      restore("spark.graft.winnow.maxDocsPerFp", prevFp)
-      restore("spark.graft.profile", prevProfile)
+    withConf("spark.graft.winnow.maxDocsPerFp" -> "10000",
+        "spark.graft.profile" -> "scale") {
+      GraftConf.requireKnown(spark) // must not throw
     }
   }
 }

@@ -18,17 +18,11 @@ class IvfSeedingSpec extends SparkFunSuite {
     o
   }
 
-  private def withConfs(kv: (String, String)*)(body: => Unit): Unit =
-    try {
-      kv.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally kv.foreach { case (k, _) => spark.conf.unset(k) }
-
   test("kmeanspp seeding + eps stop: objective >= the default 1-iter path, deterministically") {
     val defaultObj = objective(1)
     var ppObj1 = 0.0
     var ppObj2 = 0.0
-    withConfs(
+    withConf(
       "spark.graft.ivf.seeding" -> "kmeanspp",
       "spark.graft.ivf.objectiveEps" -> "0.0005") {
       ppObj1 = objective(8)
@@ -42,7 +36,7 @@ class IvfSeedingSpec extends SparkFunSuite {
   }
 
   test("farthest-point seeds are 16 distinct vectors and include vec_id 0") {
-    withConfs("spark.graft.ivf.seeding" -> "kmeanspp") {
+    withConf("spark.graft.ivf.seeding" -> "kmeanspp") {
       val top2 = Similarity.ivfTop2(spark, sf, 0)
       val cents = top2.select(col("cent_id")).distinct().collect().map(_.getLong(0)).sorted
       assert(cents.length === 16, s"expected 16 cells, got ${cents.length}")
@@ -62,7 +56,7 @@ class IvfSeedingSpec extends SparkFunSuite {
     val pinned = Similarity.knnIvfPq(spark, sf).collect().map(_.toString).sorted.toSeq
     CacheScope.releaseAll()
     var underConfs: Seq[String] = Nil
-    withConfs(
+    withConf(
       "spark.graft.ivf.seeding" -> "kmeanspp",
       "spark.graft.ivf.objectiveEps" -> "0.0005") {
       underConfs = Similarity.knnIvfPq(spark, sf).collect().map(_.toString).sorted.toSeq

@@ -78,8 +78,7 @@ class LshGuardSpec extends SparkFunSuite {
       9000L -> boilerText,                                              // exact dup of the hot group
       9001L -> "regular500a regular500b regular500c regular500d regular500e", // dup of the cold doc
       9002L -> "fresh9002a fresh9002b fresh9002c fresh9002d fresh9002e"))     // novel
-    spark.conf.set("spark.graft.lsh.maxBucket", "50")
-    try {
+    withConf("spark.graft.lsh.maxBucket" -> "50") {
       val got = operators.Dedup.dedupBatchAgainstIndex(batch, idx).collect()
         .map(r => r.getAs[Long]("doc_id") ->
           (r.getAs[java.lang.Long]("matched_base"), r.getAs[Long]("n_base_dups"),
@@ -90,17 +89,16 @@ class LshGuardSpec extends SparkFunSuite {
       // cold near-dup path untouched
       assert(got(9001L) === ((java.lang.Long.valueOf(500L), 1L, false)))
       assert(got(9002L)._3, "novel doc not accepted")
-    } finally spark.conf.unset("spark.graft.lsh.maxBucket")
+    }
   }
 
   test("incremental guard: cap above every bucket equals unguarded on the real corpus") {
     val unguarded = Dedup.dedupIncremental(spark, sf).collect().map(_.toString).sorted.toSeq
     CacheScope.releaseAll()
-    spark.conf.set("spark.graft.lsh.maxBucket", "1000000")
-    try {
+    withConf("spark.graft.lsh.maxBucket" -> "1000000") {
       val big = Dedup.dedupIncremental(spark, sf).collect().map(_.toString).sorted.toSeq
       assert(big === unguarded)
-    } finally spark.conf.unset("spark.graft.lsh.maxBucket")
+    }
     CacheScope.releaseAll()
   }
 
@@ -162,8 +160,7 @@ class LshGuardSpec extends SparkFunSuite {
       9001L -> coldBase.head._2,           // dup of a cold base vector
       9002L -> Array.fill(dims)(-1.0f)) // anti-aligned: no bucket, cos < 0
       .toDF("vec_id", "embedding")
-    spark.conf.set("spark.graft.lsh.maxBucket", "50")
-    try {
+    withConf("spark.graft.lsh.maxBucket" -> "50") {
       val got = Similarity.incrementalNearDup(base, delta).collect()
         .map(r => r.getAs[Long]("vec_id") ->
           (r.getAs[java.lang.Long]("matched_base"), r.getAs[Long]("n_base_dups"),
@@ -172,7 +169,7 @@ class LshGuardSpec extends SparkFunSuite {
         s"hot exact dup mishandled: ${got(9000L)}")
       assert(got(9001L)._1 === 500L && !got(9001L)._3)
       assert(got(9002L)._3, "novel vector not flagged new")
-    } finally spark.conf.unset("spark.graft.lsh.maxBucket")
+    }
   }
 
   test("sign-LSH guard: big cap equals unguarded on the real corpus") {

@@ -22,4 +22,17 @@ object SparkSpecBase {
 abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sf: String = SparkSpecBase.sf
+
+  /** Run `body` with each `key -> value` set on the shared session, then
+    * put every key back to the value it held before (unset if none). */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

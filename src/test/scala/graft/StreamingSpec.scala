@@ -14,12 +14,6 @@ class StreamingSpec extends SparkFunSuite {
   private def t(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00")
 
-  /** Put `key` back to the value captured before a test changed it. */
-  private def restore(key: String, prev: Option[String]): Unit = prev match {
-    case Some(v) => spark.conf.set(key, v)
-    case None => spark.conf.unset(key)
-  }
-
   test("MemoryStream tumbling counts match the batch aggregation") {
     val s = spark
     import s.implicits._
@@ -67,14 +61,12 @@ class StreamingSpec extends SparkFunSuite {
     // same answer, different backend — the swap is pure configuration.
     val s = spark
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(key ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val viaRocks = Streaming.streamDedup(s, sf).collect()
       assert(viaRocks.length === graft.Tables.events(s, sf).count())
       assert(viaRocks.map(_.getAs[Long]("event_id")).distinct.length === viaRocks.length)
-    } finally restore(key, prev)
+    }
   }
 
   test("flatMapGroupsWithState sessionizer emits closed sessions across batches") {
@@ -315,55 +307,52 @@ class StreamingSpec extends SparkFunSuite {
     operators.TextAnalysis.writeWinnowIndexOf(
       Seq(1L -> "seed1a seed1b seed1c seed1d seed1e seed1f seed1g seed1h")
         .toDF("doc_id", "text"), idx)
-    val prevMinShared = s.conf.getOption("spark.graft.winnow.minShared")
-    s.conf.set("spark.graft.winnow.minShared", "1")
-    try {
-      val evalSel = CacheScope.track(
-        operators.TextAnalysis.winnowSelectionOf(evalDocs).persist())
-      val cleanBatch = Seq(
-        10L -> "c10a c10b c10c c10d c10e c10f c10g c10h",
-        11L -> "c11a c11b c11c c11d c11e c11f c11g c11h")
-      val leakyBatch = Seq(
-        20L -> s"t1 t2 t3 t4 t5 t6 t7 $leak t8",
-        21L -> "c21a c21b c21c c21d c21e c21f c21g c21h")
-      val reports = collection.mutable.ArrayBuffer.empty[Seq[String]]
-      val ms = MemoryStream[(Long, String)]
-      val q = ms.toDF().toDF("doc_id", "text").writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          reports += operators.TextAnalysis
-            .contaminationMonitorBatch(b.toDF(), evalSel, idx)
-            .collect().map(_.toString).toSeq
-          ()
-        }
-        .start()
+    withConf("spark.graft.winnow.minShared" -> "1") {
       try {
-        ms.addData(cleanBatch); q.processAllAvailable()
-        ms.addData(leakyBatch); q.processAllAvailable()
-      } finally q.stop()
-      assert(reports.head.isEmpty, "clean batch reported a leak")
-      val flagged = operators.TextAnalysis
-        .contaminationMonitorBatch(leakyBatch.toDF("doc_id", "text"), evalSel, idx)
-      // replay of the committed leaky batch: identical report…
-      assert(reports(1).nonEmpty, "leaky batch not flagged at ingest")
-      assert(flagged.collect().map(_.toString).toSeq === reports(1),
-        "replayed batch diverged from its first run")
-      // …and no index regrowth
-      val ids = s.read.parquet(idx).select(col("doc_id")).distinct()
-        .as[Long].collect().toSet
-      assert(ids === Set(1L, 10L, 11L, 20L, 21L), s"index ids wrong: $ids")
-      // the report points at the right pair, with in-span positions
-      // (eval leak starts at gram 4, train at gram 8 — 1-based)
-      val r = reports(1).mkString(" ")
-      assert(r.contains("[901,20,") && !r.contains("902") && !r.contains("[901,21,"),
-        s"wrong pair set: ${reports(1)}")
-      // offline forensics over the grown index agree with the monitor
-      val offline = operators.TextAnalysis.contaminationFromIndex(
-        evalDocs.select(col("doc_id"), col("text")), idx).collect()
-      assert(offline.map(x => (x.getAs[Long]("eval_id"), x.getAs[Long]("train_id")))
-        .toSet === Set((901L, 20L)), "offline forensics diverge from the monitor")
-    } finally {
-      restore("spark.graft.winnow.minShared", prevMinShared)
-      CacheScope.releaseAll()
+        val evalSel = CacheScope.track(
+          operators.TextAnalysis.winnowSelectionOf(evalDocs).persist())
+        val cleanBatch = Seq(
+          10L -> "c10a c10b c10c c10d c10e c10f c10g c10h",
+          11L -> "c11a c11b c11c c11d c11e c11f c11g c11h")
+        val leakyBatch = Seq(
+          20L -> s"t1 t2 t3 t4 t5 t6 t7 $leak t8",
+          21L -> "c21a c21b c21c c21d c21e c21f c21g c21h")
+        val reports = collection.mutable.ArrayBuffer.empty[Seq[String]]
+        val ms = MemoryStream[(Long, String)]
+        val q = ms.toDF().toDF("doc_id", "text").writeStream
+          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            reports += operators.TextAnalysis
+              .contaminationMonitorBatch(b.toDF(), evalSel, idx)
+              .collect().map(_.toString).toSeq
+            ()
+          }
+          .start()
+        try {
+          ms.addData(cleanBatch); q.processAllAvailable()
+          ms.addData(leakyBatch); q.processAllAvailable()
+        } finally q.stop()
+        assert(reports.head.isEmpty, "clean batch reported a leak")
+        val flagged = operators.TextAnalysis
+          .contaminationMonitorBatch(leakyBatch.toDF("doc_id", "text"), evalSel, idx)
+        // replay of the committed leaky batch: identical report…
+        assert(reports(1).nonEmpty, "leaky batch not flagged at ingest")
+        assert(flagged.collect().map(_.toString).toSeq === reports(1),
+          "replayed batch diverged from its first run")
+        // …and no index regrowth
+        val ids = s.read.parquet(idx).select(col("doc_id")).distinct()
+          .as[Long].collect().toSet
+        assert(ids === Set(1L, 10L, 11L, 20L, 21L), s"index ids wrong: $ids")
+        // the report points at the right pair, with in-span positions
+        // (eval leak starts at gram 4, train at gram 8 — 1-based)
+        val r = reports(1).mkString(" ")
+        assert(r.contains("[901,20,") && !r.contains("902") && !r.contains("[901,21,"),
+          s"wrong pair set: ${reports(1)}")
+        // offline forensics over the grown index agree with the monitor
+        val offline = operators.TextAnalysis.contaminationFromIndex(
+          evalDocs.select(col("doc_id"), col("text")), idx).collect()
+        assert(offline.map(x => (x.getAs[Long]("eval_id"), x.getAs[Long]("train_id")))
+          .toSet === Set((901L, 20L)), "offline forensics diverge from the monitor")
+      } finally CacheScope.releaseAll()
     }
   }
 
@@ -474,77 +463,72 @@ class StreamingSpec extends SparkFunSuite {
     operators.TextAnalysis.writeWinnowIndexOf(
       Seq(1L -> "seed1a seed1b seed1c seed1d seed1e seed1f seed1g seed1h")
         .toDF("doc_id", "text"), idx)
-    val prevMinShared = s.conf.getOption("spark.graft.winnow.minShared")
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.graft.winnow.minShared", "1")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val evalSel = CacheScope.track(
-        operators.TextAnalysis.winnowSelectionOf(evalDocs).persist())
-      val reports = collection.mutable.ArrayBuffer.empty[Seq[String]]
-      def writeBatch(rows: Seq[(Long, String)]): Unit =
-        rows.toDF("doc_id", "text").coalesce(1)
-          .write.mode("append").parquet(in.toString)
-      def start() = s.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          reports += operators.TextAnalysis
-            .contaminationMonitorBatch(b.toDF(), evalSel, idx)
-            .collect().map(_.toString).toSeq
-          ()
-        }
-        .start()
-      writeBatch(Seq(10L -> "c10a c10b c10c c10d c10e c10f c10g c10h"))
-      writeBatch(Seq(
-        20L -> s"t1 t2 t3 t4 $leak t5 t6 t7",
-        21L -> "c21a c21b c21c c21d c21e c21f c21g c21h"))
-      val q1 = start()
-      q1.processAllAvailable()
-      q1.stop() // the kill: both batches committed, query gone
-      val afterKill = reports.toList
-      assert(afterKill.size === 2 && afterKill.head.isEmpty)
-      assert(afterKill(1).exists(_.contains("[901,20,")),
-        s"leak not flagged before the kill: ${afterKill(1)}")
-      // upstream at-least-once: doc 20 REDELIVERED after the crash,
-      // alongside a genuinely new doc
-      writeBatch(Seq(
-        20L -> s"t1 t2 t3 t4 $leak t5 t6 t7",
-        30L -> "c30a c30b c30c c30d c30e c30f c30g c30h"))
-      val q2 = start()
-      try q2.processAllAvailable()
-      finally q2.stop()
-      // (1) exactly ONE new batch ran: the checkpoint held offsets for
-      // the two committed files — no reprocessing after the restart
-      assert(reports.size === 3,
-        s"restart reprocessed committed batches: ${reports.size} reports")
-      // (2) the redelivered doc re-reports its leak IDENTICALLY
-      assert(reports(2) === afterKill(1),
-        "redelivered doc's report diverged from its first run")
-      // …and appended nothing: every id exactly once, 30 arrived
-      val ids = s.read.parquet(idx).groupBy(col("doc_id")).count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(ids.keySet === Set(1L, 10L, 20L, 21L, 30L), s"index ids: $ids")
-      // no doc's selection was double-appended (regrowth would double
-      // its per-doc fingerprint rows via duplicate (doc, fp) files)
-      val dupFps = s.read.parquet(idx)
-        .groupBy(col("doc_id"), col("fp"), col("first_pos")).count()
-        .filter(col("count") > 1).count()
-      assert(dupFps === 0, "replayed append duplicated fingerprint rows")
-      // (3) offline forensics over the grown index == the online report
-      val offline = operators.TextAnalysis.contaminationFromIndex(
-        evalDocs.select(col("doc_id"), col("text")), idx)
-        .collect().map(_.toString).toSeq
-      assert(offline === afterKill(1),
-        s"offline forensics diverge from the monitor: $offline vs ${afterKill(1)}")
-    } finally {
-      restore("spark.graft.winnow.minShared", prevMinShared)
-      restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
-      CacheScope.releaseAll()
+    withConf("spark.graft.winnow.minShared" -> "1",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      try {
+        val evalSel = CacheScope.track(
+          operators.TextAnalysis.winnowSelectionOf(evalDocs).persist())
+        val reports = collection.mutable.ArrayBuffer.empty[Seq[String]]
+        def writeBatch(rows: Seq[(Long, String)]): Unit =
+          rows.toDF("doc_id", "text").coalesce(1)
+            .write.mode("append").parquet(in.toString)
+        def start() = s.readStream
+          .schema("doc_id LONG, text STRING")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(in.toString)
+          .writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            reports += operators.TextAnalysis
+              .contaminationMonitorBatch(b.toDF(), evalSel, idx)
+              .collect().map(_.toString).toSeq
+            ()
+          }
+          .start()
+        writeBatch(Seq(10L -> "c10a c10b c10c c10d c10e c10f c10g c10h"))
+        writeBatch(Seq(
+          20L -> s"t1 t2 t3 t4 $leak t5 t6 t7",
+          21L -> "c21a c21b c21c c21d c21e c21f c21g c21h"))
+        val q1 = start()
+        q1.processAllAvailable()
+        q1.stop() // the kill: both batches committed, query gone
+        val afterKill = reports.toList
+        assert(afterKill.size === 2 && afterKill.head.isEmpty)
+        assert(afterKill(1).exists(_.contains("[901,20,")),
+          s"leak not flagged before the kill: ${afterKill(1)}")
+        // upstream at-least-once: doc 20 REDELIVERED after the crash,
+        // alongside a genuinely new doc
+        writeBatch(Seq(
+          20L -> s"t1 t2 t3 t4 $leak t5 t6 t7",
+          30L -> "c30a c30b c30c c30d c30e c30f c30g c30h"))
+        val q2 = start()
+        try q2.processAllAvailable()
+        finally q2.stop()
+        // (1) exactly ONE new batch ran: the checkpoint held offsets for
+        // the two committed files — no reprocessing after the restart
+        assert(reports.size === 3,
+          s"restart reprocessed committed batches: ${reports.size} reports")
+        // (2) the redelivered doc re-reports its leak IDENTICALLY
+        assert(reports(2) === afterKill(1),
+          "redelivered doc's report diverged from its first run")
+        // …and appended nothing: every id exactly once, 30 arrived
+        val ids = s.read.parquet(idx).groupBy(col("doc_id")).count()
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(ids.keySet === Set(1L, 10L, 20L, 21L, 30L), s"index ids: $ids")
+        // no doc's selection was double-appended (regrowth would double
+        // its per-doc fingerprint rows via duplicate (doc, fp) files)
+        val dupFps = s.read.parquet(idx)
+          .groupBy(col("doc_id"), col("fp"), col("first_pos")).count()
+          .filter(col("count") > 1).count()
+        assert(dupFps === 0, "replayed append duplicated fingerprint rows")
+        // (3) offline forensics over the grown index == the online report
+        val offline = operators.TextAnalysis.contaminationFromIndex(
+          evalDocs.select(col("doc_id"), col("text")), idx)
+          .collect().map(_.toString).toSeq
+        assert(offline === afterKill(1),
+          s"offline forensics diverge from the monitor: $offline vs ${afterKill(1)}")
+      } finally CacheScope.releaseAll()
     }
   }
 
@@ -557,18 +541,12 @@ class StreamingSpec extends SparkFunSuite {
     // assertion tells the two sources apart.
     val key = "spark.graft.stream.statePartitions"
     val shuffleKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    val prevShuffle = spark.conf.getOption(shuffleKey)
     val shuffleParts = spark.sparkContext.defaultParallelism + 3
-    spark.conf.unset(key)
-    spark.conf.set(shuffleKey, shuffleParts.toString)
-    try {
+    withConf(key -> "8", shuffleKey -> shuffleParts.toString) {
+      spark.conf.unset(key)
       assert(Streaming.resolvedStatePartitions(spark) === shuffleParts)
       spark.conf.set(key, "8")
       assert(Streaming.resolvedStatePartitions(spark) === 8)
-    } finally {
-      restore(key, prev)
-      restore(shuffleKey, prevShuffle)
     }
   }
 }

@@ -165,13 +165,9 @@ class WinnowGuardSpec extends SparkFunSuite {
 
   test("conf wiring: winnow.maxDocsPerFp reaches winnowMatches; big cap equals default") {
     val default = TextAnalysis.winnowMatches(spark, sf).collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.winnow.maxDocsPerFp", "1000000")
-    try {
+    try withConf("spark.graft.winnow.maxDocsPerFp" -> "1000000") {
       val bigCap = TextAnalysis.winnowMatches(spark, sf).collect().map(_.toString).sorted.toSeq
       assert(bigCap === default)
-    } finally {
-      spark.conf.unset("spark.graft.winnow.maxDocsPerFp")
-      CacheScope.releaseAll()
-    }
+    } finally CacheScope.releaseAll()
   }
 }
