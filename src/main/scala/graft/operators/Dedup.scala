@@ -522,44 +522,10 @@ object Dedup {
     * is written ONCE at ingest and appended per batch; every later delta
     * dedups against the files without recomputing a single base
     * signature. (Parquet here; the graft-bucket DSv2 table works the same
-    * way for the object-store deployment.) */
-  def writeSignatureIndex(docs: DataFrame, path: String): Unit = {
-    bandsOf(signaturesOf(docs)).write.mode("overwrite").parquet(path)
-    stampGeometry(docs.sparkSession, path)
-  }
-
-  /** Geometry stamp carried by every persisted signature index — an
-    * underscore-prefixed sidecar the parquet reader ignores. Band keys
-    * are a FUNCTION of the geometry: matching a delta derived under a
-    * different `spark.graft.lsh.bands`/`.rowsPerBand` against stored
-    * bands would silently find nothing (or nonsense), so every read path
-    * validates the stamp and fails loudly on a mismatch instead. Indexes
-    * written before stamping existed (no sidecar) are accepted as-is. */
-  private def geometryStampPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_lsh_geometry")
-
-  private def stampGeometry(s: SparkSession, path: String): Unit = {
-    val p = geometryStampPath(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(lshGeometry(s).toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def checkGeometryStamp(s: SparkSession, path: String): Unit = {
-    val p = geometryStampPath(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stamped =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      val current = lshGeometry(s).toString
-      if (stamped != current) throw new IllegalStateException(
-        s"signature index at $path was built with LSH geometry [$stamped] " +
-          s"but the session confs give [$current] — rebuild the index or " +
-          "align spark.graft.lsh.bands/rowsPerBand")
-    }
-  }
+    * way for the object-store deployment.) Stamped with the LSH geometry
+    * — band keys are a function of it ([[PersistedIndex]]). */
+  def writeSignatureIndex(docs: DataFrame, path: String): Unit =
+    PersistedIndex.Signature.write(bandsOf(signaturesOf(docs)), path)
 
   /** [[dedupIncremental]]'s production shape: the base side comes from a
     * [[writeSignatureIndex]] table on disk; only the DELTA batch's
@@ -569,7 +535,7 @@ object Dedup {
     * bands are the same rows the in-query derivation would build. */
   def dedupIncrementalFromIndex(s: SparkSession, d: String,
       indexPath: String): DataFrame = {
-    checkGeometryStamp(s, indexPath)
+    PersistedIndex.Signature.check(s, indexPath)
     val base = s.read.parquet(indexPath)
     val deltaDocs = documents(s, d).filter(col("doc_id") % 10 >= 8)
     incrementalMatch(base, bandsOf(signaturesOf(deltaDocs)),
@@ -586,21 +552,17 @@ object Dedup {
     * index between batches is the compaction-free growth path. */
   def dedupBatchAgainstIndex(batch: DataFrame, indexPath: String): DataFrame = {
     val s = batch.sparkSession
-    checkGeometryStamp(s, indexPath)
+    PersistedIndex.Signature.check(s, indexPath)
     incrementalMatch(s.read.parquet(indexPath),
       bandsOf(signaturesOf(batch)), batch.select(col("doc_id")))
   }
 
   /** Index GROWTH step: append a set of accepted (doc_id, text) docs'
-    * band rows to a [[writeSignatureIndex]] table. Parquet append — one
-    * new file per batch; [[IndexMaintenance.maybeCompact]] (conf-gated,
-    * wired into [[dedupBatchAndGrowIndex]]) bounds the accumulated
-    * small-file count so listing/footer cost never swamps the O(delta)
-    * match. */
-  def appendToSignatureIndex(acceptedDocs: DataFrame, path: String): Unit = {
-    checkGeometryStamp(acceptedDocs.sparkSession, path)
-    bandsOf(signaturesOf(acceptedDocs)).write.mode("append").parquet(path)
-  }
+    * band rows to a [[writeSignatureIndex]] table — [[PersistedIndex
+    * .grow]]: docs already indexed are skipped (a replayed batch appends
+    * nothing), one new file per batch, conf-gated compaction. */
+  def appendToSignatureIndex(acceptedDocs: DataFrame, path: String): Unit =
+    PersistedIndex.Signature.grow(acceptedDocs, path)(d => bandsOf(signaturesOf(d)))
 
   /** The full streaming-ingest micro-batch body: dedup one arriving
     * (doc_id, text) batch against the index, then GROW the index with the
@@ -636,23 +598,17 @@ object Dedup {
     * near-dups) verbatim. */
   def dedupBatchAndGrowIndex(batch: DataFrame, indexPath: String): DataFrame = {
     val s = batch.sparkSession
-    checkGeometryStamp(s, indexPath)
+    PersistedIndex.Signature.check(s, indexPath)
     val bands = truncateLineage(bandsOf(signaturesOf(batch)))
     val base = s.read.parquet(indexPath)
       .join(broadcast(batch.select(col("doc_id"))), Seq("doc_id"), "left_anti")
     val result = truncateLineage(
       incrementalMatch(base, bands, batch.select(col("doc_id"))))
-    val acceptedBands = bands
-      .join(result.filter(col("is_new")).select(col("doc_id")), "doc_id")
-      .join(s.read.parquet(indexPath).select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-    acceptedBands.select(col("doc_id"), col("sig"), col("band"), col("bucket"))
-      .write.mode("append").parquet(indexPath)
-    // bound small-file growth (one file per batch otherwise) — conf-gated,
-    // amortized: every compactEvery batches, not every batch. Safe here:
-    // `result` is already eagerly materialized above, so the swap cannot
-    // invalidate the frame being returned.
-    IndexMaintenance.maybeCompact(s, indexPath)
+    // `result` is already eagerly materialized, so neither the append
+    // nor a compaction swap can change the frame being returned
+    PersistedIndex.Signature.grow(
+      bands.join(result.filter(col("is_new")).select(col("doc_id")), "doc_id"),
+      indexPath)(_.select(col("doc_id"), col("sig"), col("band"), col("bucket")))
     result
   }
 
@@ -661,48 +617,33 @@ object Dedup {
     * the FILES. Same oracle as `q_dedup_incremental` — the persisted hop
     * must be invisible in the result. */
   def dedupIncrementalIndexed(s: SparkSession, d: String): DataFrame = {
-    val idx = graft.TempDirs.freshUnder("graft_sigindex_",
-      graft.TempDirs.sessionKey(s, d), "base").toString
+    val idx = PersistedIndex.Signature.fresh(s, d, "base")
     writeSignatureIndex(documents(s, d).filter(col("doc_id") % 10 < 8), idx)
     dedupIncrementalFromIndex(s, d, idx)
   }
 
   /** Build count of the signature-index served face — ServedFacesSpec
     * pins build-once. */
-  private[graft] val sigServedBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def sigServedBuilds = PersistedIndex.Signature.builds("served_base")
 
   /** Catalog face: the SERVE-ONLY cost of the signature/band lifecycle
     * — the production number of streaming ingest ([[Retrieval
-    * .bm25BatchServed]]'s dedup twin). The standing base index is built
-    * at most once per (session, dataset) behind a completed-build
-    * marker; every later invocation pays only the DELTA side —
-    * signature derivation for the arriving batch plus the bucket join —
-    * which is exactly what each micro-batch of
-    * [[dedupBatchAgainstIndex]] costs in production. Index content
-    * depends on the documents files, the base split (%10<8, a face
-    * constant), AND the LSH geometry (band keys are a function of
-    * bands×rowsPerBand), so geometry rides the fingerprint: a retune
-    * REBUILDS here, where serving the stale files would instead fail
-    * fast on the `_lsh_geometry` stamp — rebuild is the served face's
-    * contract, crash is the library primitive's. Same oracle as
-    * `q_dedup_incremental`, verbatim. */
+    * .bm25BatchServed]]'s dedup twin). The standing base index is
+    * [[PersistedIndex.served]]; every later invocation pays only the
+    * DELTA side — signature derivation for the arriving batch plus the
+    * bucket join — which is exactly what each micro-batch of
+    * [[dedupBatchAgainstIndex]] costs in production. The base split
+    * (%10<8, a face constant) rides the fingerprint beside the LSH
+    * geometry. Same oracle as `q_dedup_incremental`, verbatim. */
   def dedupIncrementalServed(s: SparkSession, d: String): DataFrame =
     dedupIncrementalFromIndex(s, d, servedSigIndex(s, d))
 
   /** The standing base-split signature index [[dedupIncrementalServed]]
-    * and [[dedupIncrementalShardServed]] SHARE, built at most once per
-    * (session, dataset, geometry) — one artifact, two probe shapes. */
-  private def servedSigIndex(s: SparkSession, d: String): String = {
-    val fp = graft.Tables.filesFingerprint(s, d, "documents") +
-      s"|${lshGeometry(s)}"
-    val (idx, built) = graft.TempDirs.buildOnce("graft_sigindex_",
-      graft.TempDirs.sessionKey(s, d), "served_base", fp)(p =>
-      writeSignatureIndex(
-        documents(s, d).filter(col("doc_id") % 10 < 8), p.toString))
-    if (built) sigServedBuilds.incrementAndGet()
-    idx.toString
-  }
+    * and [[dedupIncrementalShardServed]] SHARE — one artifact, two probe
+    * shapes. */
+  private def servedSigIndex(s: SparkSession, d: String): String =
+    PersistedIndex.Signature.served(s, d, "served_base", "split=%10<8")(p =>
+      writeSignatureIndex(documents(s, d).filter(col("doc_id") % 10 < 8), p))
 
   /** The PINNED delta batch of [[dedupIncrementalShardServed]]: delta-
     * split docs (`% 10 >= 8`) below this id — 50 docs at every fixture
@@ -725,7 +666,7 @@ object Dedup {
     * SQL with the one batch predicate on the delta side. */
   def dedupIncrementalShardServed(s: SparkSession, d: String): DataFrame = {
     val idx = servedSigIndex(s, d)
-    checkGeometryStamp(s, idx)
+    PersistedIndex.Signature.check(s, idx)
     val deltaDocs = documents(s, d)
       .filter(col("doc_id") % 10 >= 8 && col("doc_id") < IncShardDeltaMax)
     incrementalMatch(s.read.parquet(idx), bandsOf(signaturesOf(deltaDocs)),
@@ -1718,8 +1659,8 @@ object Dedup {
   // Persisted gram-count index — the production face of the span family.
   // spanDedup/spanRemoval recompute the corpus-wide 10-gram counts
   // inside every query; at 100 TB the gram-count table is built ONCE
-  // and grown incrementally — the postings/winnow index lifecycle
-  // (build/append/compact/serve with a geometry sidecar). Rows are
+  // and grown incrementally — the [[PersistedIndex]] lifecycle
+  // (build/append/compact/serve behind a geometry stamp). Rows are
   // per-(gram, doc) partial counts, so the index carries its own doc
   // registry: append replay-safety is a column-pruned anti-join on the
   // index's doc_id (exactly [[Retrieval.appendToPostingsIndex]]'s
@@ -1730,7 +1671,7 @@ object Dedup {
 
   /** Token gram width of the span family — the index GEOMETRY: counts
     * collected at one width are meaningless to a reader expecting
-    * another, so the `_gram_meta` sidecar records it fail-fast. */
+    * another, so it is the gram family's stamped geometry. */
   private[graft] val SpanGramWidth = 10
 
   /** Gram-hash partition count; the xxhash64 gram hash is already
@@ -1741,27 +1682,14 @@ object Dedup {
   private def gramBucketCol =
     pmod(col("gh"), lit(GramBuckets.toLong)).cast("int")
 
-  private def requireGramMeta(s: SparkSession, path: String): Unit = {
-    val m = s.read.parquet(path + "/_gram_meta").select(col("w")).collect()(0)
-    require(m.getInt(0) == SpanGramWidth,
-      s"gram index at $path was built at w=${m.getInt(0)} but this engine's " +
-        s"span family runs at w=$SpanGramWidth — rebuild the index")
-    // the r20 layout stores gh as a 64-bit hash; a pre-r20 md5-hex index
-    // would otherwise fail much later with a cast error inside a job
-    val ghType = s.read.parquet(path).schema("gh").dataType
-    require(ghType == org.apache.spark.sql.types.LongType,
-      s"gram index at $path stores gh as ${ghType.sql} but this engine " +
-        "runs 64-bit gram hashes — rebuild the index")
-  }
-
   /** Build the gram-count index at `path`: per-(gram, doc) counts
-    * partitioned by `pmod(gh, 64)`, one file per bucket, plus the
-    * one-row `_gram_meta` (w) geometry sidecar and the `_gram_totals`
+    * partitioned by `pmod(gh, 64)`, one file per bucket, stamped
+    * `w=10 gh=xxh64` ([[PersistedIndex.Gram]]), plus the `_gram_totals`
     * serving sidecar ([[refreshGramTotals]]). */
   def writeGramIndex(s: SparkSession, d: String, path: String): Unit =
     writeGramIndexOf(documents(s, d), path)
 
-  /** Per-(gram, doc) counts `(gh, doc_id, cnt)` folded INSIDE each doc's
+  /** Per-(gram, doc) counts `(doc_id, gh, cnt, bucket)` folded INSIDE each doc's
     * row by [[graft.functions.GramCountExplode]] — shared by the index
     * build and append. Why not gram positions + `groupBy(gh, doc_id)`:
     * that grouping key is ~unique per position row (a 10-gram rarely
@@ -1769,35 +1697,35 @@ object Dedup {
     * row per gram POSITION — measured (AQE-off per-stage, r20) as half
     * the build's 166.8 MiB of ×10 shuffle; with the fold in-row the
     * build's only exchange is the 64-bucket layout repartition. */
-  private def gramDocCounts(docs: DataFrame): DataFrame = {
+  private def gramRows(docs: DataFrame): DataFrame = {
     graft.functions.GramCountExplode.register(docs.sparkSession)
     tokenized(docs) // widened inside tokenized
       .select(col("doc_id"),
         expr(s"gram_count_explode(toks, $SpanGramWidth)"))
+      .withColumn("bucket", gramBucketCol)
   }
 
   /** [[writeGramIndex]] over any (doc_id, text) frame — the unit the
     * spec uses to index a partial corpus before growing it. */
   def writeGramIndexOf(docs: DataFrame, path: String): Unit = {
-    val s = docs.sparkSession
-    val counts = gramDocCounts(docs)
-      .withColumn("bucket", gramBucketCol)
+    val counts = gramRows(docs)
       .repartition(GramBuckets, col("bucket"))
       .persist()
     try {
-      counts.write.mode("overwrite").partitionBy("bucket").parquet(path)
-      s.range(1).select(lit(SpanGramWidth).as("w"))
-        .coalesce(1).write.mode("overwrite").parquet(path + "/_gram_meta")
-      // totals from the SAME bucket-partitioned frame: hash(bucket)
-      // already co-locates every gh (bucket is a function of gh), so
-      // the aggregation completes in place — the fresh build pays no
-      // read-back and no second exchange for its sidecar; only append
-      // uses the idempotent read-back refresh
-      counts.groupBy(col("bucket"), col("gh")).agg(sum(col("cnt")).as("cnt"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(path + "/_gram_totals")
+      PersistedIndex.Gram.write(counts, path)
+      // totals from the SAME bucket-partitioned frame: the fresh build
+      // pays no read-back and no second exchange for its sidecar
+      writeGramTotals(counts, path)
     } finally counts.unpersist()
   }
+
+  /** The `_gram_totals` writer over a frame laid out on `bucket` —
+    * hash(bucket) already co-locates every gh (bucket is a function of
+    * gh), so the aggregation completes inside the layout partitions. */
+  private def writeGramTotals(counts: DataFrame, path: String): Unit =
+    counts.groupBy(col("bucket"), col("gh")).agg(sum(col("cnt")).as("cnt"))
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(path + "/_gram_totals")
 
   /** Rebuild the `_gram_totals` sidecar: per-gram CORPUS totals, summed
     * from the index's per-(gram, doc) partials, bucket-partitioned like
@@ -1812,21 +1740,16 @@ object Dedup {
     * gh to learn which grams repeat — measured (AQE-off per-stage, r20)
     * as ~90 of the serve side's ~270 MiB of ×10 shuffle, paid per
     * query; the sum belongs at build time, which is what an index IS.
-    * The exchange here rides the bucket layout: hash(bucket) already
-    * co-locates every gh (bucket is a function of gh), so the
-    * aggregation completes inside the 64 layout partitions. */
+    * The read-back is laid out on the 64 buckets first, as the build's
+    * frame already is. */
   def refreshGramTotals(s: SparkSession, path: String): Unit =
-    s.read.parquet(path)
-      .repartition(GramBuckets, col("bucket"))
-      .groupBy(col("bucket"), col("gh")).agg(sum(col("cnt")).as("cnt"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(path + "/_gram_totals")
+    writeGramTotals(s.read.parquet(path).repartition(GramBuckets, col("bucket")), path)
 
-  /** Index GROWTH, replay-safe under at-least-once delivery: already
-    * indexed doc_ids are anti-joined out (column-pruned read of the
-    * index's own doc_id column — no separate registry to drift), fresh
-    * docs' partial counts append into their bucket partitions, one new
-    * file per bucket per batch, conf-gated small-file compaction.
+  /** Index GROWTH, replay-safe under at-least-once delivery
+    * ([[PersistedIndex.grow]]: already indexed doc_ids are anti-joined
+    * out — the index's own doc_id column is the registry — and fresh
+    * docs' partial counts append into their bucket partitions), then
+    * the totals sidecar is refreshed.
     *
     * At-least-once delivery can duplicate WITHIN a batch too (the
     * cross-batch anti-join is blind to that), and a doubled doc row
@@ -1838,17 +1761,8 @@ object Dedup {
     * the doc registry — they are harmlessly re-examined on every
     * replay. */
   def appendToGramIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    requireGramMeta(s, path)
-    val existing = s.read.parquet(path).select(col("doc_id")).distinct()
-    val fresh = batch.dropDuplicates("doc_id")
-      .join(existing, Seq("doc_id"), "left_anti")
-    gramDocCounts(fresh)
-      .withColumn("bucket", gramBucketCol)
-      .repartition(col("bucket")) // one new file per bucket per batch
-      .write.mode("append").partitionBy("bucket").parquet(path)
-    IndexMaintenance.maybeCompactPartitioned(s, path)
-    refreshGramTotals(s, path)
+    PersistedIndex.Gram.grow(batch.dropDuplicates("doc_id"), path)(gramRows)
+    refreshGramTotals(batch.sparkSession, path)
   }
 
   /** Serve [[spanRemoval]] from a [[writeGramIndex]] table — bit-equal
@@ -1866,7 +1780,7 @@ object Dedup {
   def spanRemovalFromIndex(
       docsIn: DataFrame, indexPath: String, minCut: Int): DataFrame = {
     val s = docsIn.sparkSession
-    requireGramMeta(s, indexPath)
+    PersistedIndex.Gram.check(s, indexPath)
     require(minCut >= 1,
       s"spark.graft.span.minCut must be >= 1, got $minCut")
     val docs = tokenized(docsIn)
@@ -1944,7 +1858,7 @@ object Dedup {
     * (SpanIndexSpec asserts equality at two SFs). */
   def spanDedupFromIndex(docsIn: DataFrame, indexPath: String): DataFrame = {
     val s = docsIn.sparkSession
-    requireGramMeta(s, indexPath)
+    PersistedIndex.Gram.check(s, indexPath)
     val g = graft.CacheScope.track(
       gramPositions(tokenized(docsIn), SpanGramWidth).persist())
     spanDedupTail(g, dupGramsFromIndex(g, indexPath))
@@ -1986,7 +1900,8 @@ object Dedup {
     * lineage reads the files. */
   private val gramIndexGen = new java.util.concurrent.atomic.AtomicLong(0)
   private def gramIndexFor(s: SparkSession, d: String): String = {
-    val root = graft.TempDirs.scratchFor("graft_gramidx_", graft.TempDirs.sessionKey(s, d))
+    val root = graft.TempDirs.scratchFor(PersistedIndex.Gram.prefix,
+      graft.TempDirs.sessionKey(s, d))
     val gen = gramIndexGen.incrementAndGet()
     val path = root.resolve(s"grams_g$gen").toString
     writeGramIndex(s, d, path)
@@ -1998,27 +1913,16 @@ object Dedup {
 
   /** Build count of the gram-index served faces — ServedFacesSpec pins
     * build-once AND that the two span faces share ONE artifact. */
-  private[graft] val gramServedBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def gramServedBuilds = PersistedIndex.Gram.builds("served_grams")
 
-  /** The gram-count index the two `_served` span faces share, built at
-    * most once per (session, dataset) behind a completed-build marker —
-    * ONE artifact, two consumers, which is the point of persisting an
-    * index (the per-invocation `_indexed` twins each rebuild their
-    * own). Index content depends on the documents files and the gram
-    * width (an engine constant today, in the fingerprint anyway so a
-    * future width change can never serve stale-geometry grams — the
-    * `_gram_meta` sidecar would fail fast, but the served contract is
-    * rebuild); `span.minCut` is serve-time — correctly absent. */
-  private def servedGramIndex(s: SparkSession, d: String): String = {
-    val fp = graft.Tables.filesFingerprint(s, d, "documents") +
-      s"|w=$SpanGramWidth|gh=xxh64"
-    val (idx, built) = graft.TempDirs.buildOnce("graft_gramidx_",
-      graft.TempDirs.sessionKey(s, d), "served_grams", fp)(p =>
-      writeGramIndexOf(documents(s, d), p.toString))
-    if (built) gramServedBuilds.incrementAndGet()
-    idx.toString
-  }
+  /** The gram-count index the two `_served` span faces share
+    * ([[PersistedIndex.served]]) — ONE artifact, two consumers, which is
+    * the point of persisting an index (the per-invocation `_indexed`
+    * twins each rebuild their own). `span.minCut` is serve-time —
+    * correctly absent from the fingerprint. */
+  private def servedGramIndex(s: SparkSession, d: String): String =
+    PersistedIndex.Gram.served(s, d, "served_grams")(p =>
+      writeGramIndexOf(documents(s, d), p))
 
   /** Catalog face: the SERVE-ONLY cost of the gram-count lifecycle for
     * span REMOVAL — the per-shard production operation of a crawl

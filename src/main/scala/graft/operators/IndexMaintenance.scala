@@ -3,8 +3,12 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Maintenance for the persisted signature/vector band indexes
-  * ([[Dedup.writeSignatureIndex]], [[Similarity.writeVectorBandIndex]]).
+/** Compaction for the six persisted index families — signature, vector
+  * band, IVF, winnow, gram and postings. [[PersistedIndex.grow]] picks
+  * the recipe from the index layout: [[maybeCompact]] for the flat
+  * signature/vector-band directories, [[maybeCompactPartitioned]] for
+  * the Hive-partitioned IVF (`cell=N`), winnow, gram and postings
+  * (`bucket=N`) ones.
   *
   * The grow-index micro-batch bodies append ONE parquet file per batch —
   * the right write shape (no read-modify-write of the standing index),
@@ -15,8 +19,7 @@ import org.apache.spark.sql.SparkSession
   * ceil(bytes / targetBytes) right-sized files — one repartition
   * exchange over the index, content-identical by construction.
   *
-  * [[maybeCompact]] is the conf-gated hook the micro-batch bodies call
-  * after their append: `spark.graft.index.compactEvery = N` (default 0 =
+  * [[maybeCompact]] is the conf-gated hook run after every flat append: `spark.graft.index.compactEvery = N` (default 0 =
   * off; the scale profile sets 64) compacts whenever the part-file count
   * exceeds N, so steady-state file count is bounded by N while
   * compaction cost stays amortized (every N batches, not every batch).
@@ -26,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   * complete copy exists at every instant:
   *
   *  1. rewrite live → `<path>__compact_tmp` (live untouched);
-  *  2. copy sidecars (the `_lsh_geometry` stamp) INTO tmp — the
+  *  2. copy sidecars (the `_geometry` stamp) INTO tmp — the
   *     swapped-in dir must be complete before it goes live;
   *  3. rename live → `<path>__compact_old`, rename tmp → live
   *     (restoring old on a failed second rename);
@@ -87,9 +90,9 @@ object IndexMaintenance {
     // rewrite INTO tmp — the live index is never a write target
     s.read.parquet(live.toString).repartition(nOut)
       .write.mode("overwrite").parquet(tmp.toString)
-    // sidecars (the _lsh_geometry stamp) go into tmp BEFORE the swap, so
-    // the directory that goes live is complete — a stamp-less window
-    // would silently disable the geometry-mismatch check
+    // sidecars (the _geometry stamp) go into tmp BEFORE the swap, so
+    // the directory that goes live is complete — a stamp-less index
+    // would be refused by every reader
     fs.listStatus(live)
       .filter(f => f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith("_SUCCESS"))

@@ -315,6 +315,7 @@ object Retrieval {
     * NOTHING here re-reads corpus text. */
   def bm25BatchFromIndex(queryDocs: DataFrame, indexPath: String): DataFrame = {
     val s = queryDocs.sparkSession
+    PersistedIndex.Postings.check(s, indexPath)
     val k = GraftConf.int(s, "spark.graft.search.batchK", 5)
     require(k >= 1, "spark.graft.search.batchK must be >= 1")
     val qterms = queryDocs
@@ -355,8 +356,7 @@ object Retrieval {
     * eval docs from the files — the same oracle as the scan-side
     * [[bm25Batch]] (the persisted hop must be invisible). */
   def bm25BatchIndexed(s: SparkSession, d: String): DataFrame = {
-    val path = graft.TempDirs.freshUnder("graft_postings_",
-      graft.TempDirs.sessionKey(s, d), "train").toString
+    val path = PersistedIndex.Postings.fresh(s, d, "train")
     val stagedTrain = documents(s, d).filter(col("doc_id") % 97 =!= 0)
     writePostingsIndexOf(stagedTrain, path)
     bm25BatchFromIndex(
@@ -367,23 +367,18 @@ object Retrieval {
 
   /** Build count of the served face — lets ServedFacesSpec pin that the
     * session-cached index is built once, then only served. */
-  private[graft] val servedBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def servedBuilds = PersistedIndex.Postings.builds("served_train")
 
   /** Catalog face: the SERVE-ONLY cost of the postings lifecycle — the
     * production number. [[bm25BatchIndexed]] re-pays its index build
     * every invocation (honest for measuring the build, wrong for
     * measuring serving: bench's median then includes three builds);
-    * this face builds the index at most once per (session, dataset)
-    * behind a marker that records the documents table's file
-    * fingerprint — written only AFTER a completed build, so a crash
-    * mid-build rebuilds, and a dataset rewrite invalidates — and every
-    * later invocation serves from the warm files. Bench reps 2..n
-    * therefore measure pure serving, and the reported median IS the
-    * serving cost; read it against `q_bm25_batch_indexed`'s build+serve
-    * in the same run. The index content depends only on (dataset, the
-    * %97 train split) — no confs — so the file fingerprint is the whole
-    * invalidation story. Same oracle as `q_bm25_batch`, verbatim: the
-    * cached hop must stay invisible in the result. */
+    * this face serves a [[PersistedIndex.served]] artifact, so bench
+    * reps 2..n measure pure serving — read it against
+    * `q_bm25_batch_indexed`'s build+serve in the same run. The index
+    * content depends only on (dataset, the %97 train split) — no confs.
+    * Same oracle as `q_bm25_batch`, verbatim: the cached hop must stay
+    * invisible in the result. */
   def bm25BatchServed(s: SparkSession, d: String): DataFrame =
     bm25BatchFromIndex(
       documents(s, d).filter(col("doc_id") % 97 === 0)
@@ -394,16 +389,9 @@ object Retrieval {
     * [[bm25BatchShardServed]] SHARE, built at most once per (session,
     * dataset) — one standing artifact, two probe shapes (the
     * [[servedFullPostings]] one-artifact-many-consumers contract). */
-  private def servedTrainPostings(s: SparkSession, d: String): String = {
-    val (idx, built) = graft.TempDirs.buildOnce("graft_postings_",
-      graft.TempDirs.sessionKey(s, d), "served_train",
-      graft.Tables.filesFingerprint(s, d, "documents")) { p =>
-      writePostingsIndexOf(
-        documents(s, d).filter(col("doc_id") % 97 =!= 0), p.toString)
-    }
-    if (built) servedBuilds.incrementAndGet()
-    idx.toString
-  }
+  private def servedTrainPostings(s: SparkSession, d: String): String =
+    PersistedIndex.Postings.served(s, d, "served_train", "split=%97")(p =>
+      writePostingsIndexOf(documents(s, d).filter(col("doc_id") % 97 =!= 0), p))
 
   /** The PINNED query panel of [[bm25BatchShardServed]]: eval docs
     * (`% 97 == 0`) below this id — 5 queries (0, 97, 194, 291, 388) at
@@ -490,13 +478,13 @@ object Retrieval {
     * token's md5 bucket (serving prunes to the query terms' buckets
     * statically), repartitioned so each bucket writes one file instead
     * of one per task. Sidecars (underscore convention — invisible to a
-    * plain read of the index): `_postings_df` (vocab-sized document
-    * frequencies) and `_postings_meta` (the one-row (N, A) corpus
-    * scalars BM25 needs). Both are DERIVED state, rebuilt from the
-    * postings by [[refreshPostingsMeta]] — the single writer both the
-    * builder and [[appendToPostingsIndex]] call, so a crash between an
-    * append and its sidecar refresh is recovered by calling refresh
-    * again (idempotent), never by re-ingesting. */
+    * plain read of the index): the `_geometry` stamp ([[PersistedIndex
+    * .Postings]]), `_postings_df` (vocab-sized document frequencies) and
+    * `_postings_meta` (the one-row (N, A) corpus scalars BM25 needs).
+    * Both are DERIVED state with one writer, [[writePostingsSidecars]],
+    * so a crash between an append and its sidecar refresh is recovered
+    * by calling [[refreshPostingsMeta]] again (idempotent), never by
+    * re-ingesting. */
   def writePostingsIndex(s: SparkSession, d: String, path: String): Unit =
     writePostingsIndexOf(documents(s, d), path)
 
@@ -505,28 +493,20 @@ object Retrieval {
   def writePostingsIndexOf(docs: DataFrame, path: String): Unit = {
     // sidecars from the SAME bucket-partitioned frame (the span-index
     // build's contract, writeGramIndexOf): the fresh build pays no
-    // read-back of the files it just wrote — refreshPostingsMeta stays
-    // the idempotent recovery/append path
+    // read-back of the files it just wrote
     val rows = postingsRows(docs)
       .repartition(IndexBuckets, col("bucket"))
       .persist()
     try {
-      rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
-      rows.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(path + "/_postings_df")
-      rows.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_d"), sum(col("dl")).as("a_l"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(path + "/_postings_meta")
+      PersistedIndex.Postings.write(rows, path)
+      writePostingsSidecars(rows, path)
     } finally rows.unpersist(blocking = false)
   }
 
-  /** Rebuild both sidecars from the postings table (idempotent; the only
-    * sidecar writer). df counts rows per token; (N, A) dedups (doc_id,
-    * dl) first because a doc contributes one row per distinct token. */
-  def refreshPostingsMeta(s: SparkSession, path: String): Unit = {
-    val postings = s.read.parquet(path)
+  /** The one sidecar writer, over any postings frame. df counts rows
+    * per token; (N, A) dedups (doc_id, dl) first because a doc
+    * contributes one row per distinct token. */
+  private def writePostingsSidecars(postings: DataFrame, path: String): Unit = {
     postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
       .coalesce(1)
       .write.mode("overwrite").parquet(path + "/_postings_df")
@@ -536,24 +516,17 @@ object Retrieval {
       .write.mode("overwrite").parquet(path + "/_postings_meta")
   }
 
-  /** Index GROWTH, replay-safe under at-least-once delivery: doc_ids
-    * already indexed are anti-joined out (column-pruned read of the
-    * id column only), fresh docs append into their bucket partitions,
-    * and the derived sidecars are refreshed. The same grow-the-index
-    * contract as [[Dedup.appendToSignatureIndex]] /
-    * [[Similarity.appendToIvfIndex]]. */
+  /** Rebuild both sidecars from the postings table (idempotent). */
+  def refreshPostingsMeta(s: SparkSession, path: String): Unit =
+    writePostingsSidecars(s.read.parquet(path), path)
+
+  /** Index GROWTH, replay-safe under at-least-once delivery
+    * ([[PersistedIndex.grow]]: doc_ids already indexed are skipped,
+    * fresh docs append into their bucket partitions), then the derived
+    * sidecars are refreshed. */
   def appendToPostingsIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    val existing = s.read.parquet(path).select(col("doc_id")).distinct()
-    val fresh = batch.join(existing, Seq("doc_id"), "left_anti")
-    postingsRows(fresh)
-      .repartition(col("bucket")) // one new file per bucket per batch
-      .write.mode("append").partitionBy("bucket").parquet(path)
-    refreshPostingsMeta(s, path)
-    // conf-gated per-bucket small-file compaction (same dial as the
-    // flat band indexes); the sidecars were just rewritten above and
-    // nothing lazy reads the postings here, so the swap races nothing
-    IndexMaintenance.maybeCompactPartitioned(s, path)
+    PersistedIndex.Postings.grow(batch, path)(postingsRows)
+    refreshPostingsMeta(batch.sparkSession, path)
   }
 
   /** Serve [[bm25TopK]] from a [[writePostingsIndex]] table —
@@ -565,6 +538,7 @@ object Retrieval {
     * (N, A) scalars come from the one-row meta sidecar, NOT a corpus
     * pass. */
   def bm25FromIndex(s: SparkSession, indexPath: String): DataFrame = {
+    PersistedIndex.Postings.check(s, indexPath)
     val terms = confTerms(s)
     val buckets = terms.map(tokenBucket).distinct
     val meta = s.read.parquet(indexPath + "/_postings_meta")
@@ -580,6 +554,7 @@ object Retrieval {
   /** Serve [[phraseSearch]] from the index: pruned read of the phrase
     * terms' postings, positions re-exploded, same intersection tail. */
   def phraseFromIndex(s: SparkSession, indexPath: String): DataFrame = {
+    PersistedIndex.Postings.check(s, indexPath)
     val phrase = confPhrase(s)
     val buckets = phrase.distinct.map(tokenBucket).distinct
     val pos = s.read.parquet(indexPath)
@@ -596,15 +571,13 @@ object Retrieval {
   // the OTHER's still-readable index files at re-entry — the freshUnder
   // hazard is documented for same-face re-entry only, so keep it there
   def bm25Indexed(s: SparkSession, d: String): DataFrame = {
-    val path = graft.TempDirs.freshUnder("graft_postings_",
-      graft.TempDirs.sessionKey(s, d), "idx_bm25").toString
+    val path = PersistedIndex.Postings.fresh(s, d, "idx_bm25")
     writePostingsIndex(s, d, path)
     bm25FromIndex(s, path)
   }
 
   def phraseIndexed(s: SparkSession, d: String): DataFrame = {
-    val path = graft.TempDirs.freshUnder("graft_postings_",
-      graft.TempDirs.sessionKey(s, d), "idx_phrase").toString
+    val path = PersistedIndex.Postings.fresh(s, d, "idx_phrase")
     writePostingsIndex(s, d, path)
     phraseFromIndex(s, path)
   }
@@ -612,25 +585,17 @@ object Retrieval {
   /** Build count of the shared FULL-corpus served postings —
     * ServedFacesSpec pins build-once AND that the phrase and bm25
     * serve-only faces share ONE artifact. */
-  private[graft] val fullServedBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def fullServedBuilds = PersistedIndex.Postings.builds("served_full")
 
   /** The full-corpus postings index the two serve-only faces below
-    * share, built at most once per (session, dataset) behind a
-    * completed-build marker — ONE artifact, two consumers (a search
-    * deployment serves ranked AND phrase queries from the same
+    * share ([[PersistedIndex.served]]) — ONE artifact, two consumers (a
+    * search deployment serves ranked AND phrase queries from the same
     * postings; the per-invocation `_indexed` twins each rebuild their
-    * own). Index content depends only on the documents files — the
-    * query terms and the phrase are serve-time dials, correctly absent
-    * from the fingerprint. */
-  private def servedFullPostings(s: SparkSession, d: String): String = {
-    val (idx, built) = graft.TempDirs.buildOnce("graft_postings_",
-      graft.TempDirs.sessionKey(s, d), "served_full",
-      graft.Tables.filesFingerprint(s, d, "documents"))(p =>
-      writePostingsIndexOf(documents(s, d), p.toString))
-    if (built) fullServedBuilds.incrementAndGet()
-    idx.toString
-  }
+    * own). The query terms and the phrase are serve-time dials,
+    * correctly absent from the fingerprint. */
+  private def servedFullPostings(s: SparkSession, d: String): String =
+    PersistedIndex.Postings.served(s, d, "served_full")(p =>
+      writePostingsIndexOf(documents(s, d), p))
 
   /** Catalog face: the SERVE-ONLY cost of the positional-postings
     * lifecycle for PHRASE search — `q_phrase_indexed` bills the

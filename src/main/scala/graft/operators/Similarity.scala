@@ -720,7 +720,7 @@ object Similarity {
     * column until candidates exist. Appended per batch like
     * [[Dedup.appendToSignatureIndex]]. */
   def writeVectorBandIndex(e: DataFrame, path: String): Unit =
-    vectorBandRows(e).write.mode("overwrite").parquet(path)
+    PersistedIndex.VectorBand.write(vectorBandRows(e), path)
 
   /** [[embedNearDupIncremental]]'s production face: base bands + vectors
     * come from a [[writeVectorBandIndex]] table on disk; only the delta's
@@ -736,6 +736,7 @@ object Similarity {
     * own (or an accepted batch-mate's) prior append. */
   private def nearDupAgainstIndex(delta: DataFrame, indexPath: String,
       excludeIds: Option[DataFrame]): DataFrame = {
+    PersistedIndex.VectorBand.check(delta.sparkSession, indexPath)
     val idxAll = delta.sparkSession.read.parquet(indexPath)
     val idx = excludeIds.fold(idxAll)(ex =>
       idxAll.join(broadcast(ex), Seq("vec_id"), "left_anti"))
@@ -747,9 +748,10 @@ object Similarity {
 
   /** Vector-index GROWTH step (the ANN twin of
     * [[Dedup.appendToSignatureIndex]]): append accepted vectors' band
-    * rows as one parquet file per batch. */
+    * rows as one parquet file per batch, skipping vectors already
+    * indexed ([[PersistedIndex.grow]]). */
   def appendToVectorBandIndex(accepted: DataFrame, path: String): Unit =
-    vectorBandRows(accepted).write.mode("append").parquet(path)
+    PersistedIndex.VectorBand.grow(accepted, path)(vectorBandRows)
 
   /** Full ANN-ingest micro-batch body (the vector twin of
     * [[Dedup.dedupBatchAndGrowIndex]]): match one arriving
@@ -766,18 +768,13 @@ object Similarity {
     * index files); keep-one-representative policy; intra-batch
     * duplicates are out of scope by design, as on the text side. */
   def nearDupBatchAndGrowIndex(batch: DataFrame, indexPath: String): DataFrame = {
-    val s = batch.sparkSession
     val result = Dedup.truncateLineage(nearDupAgainstIndex(
       batch, indexPath, excludeIds = Some(batch.select(col("vec_id")))))
-    val accepted = batch
+    // `result` is already materialized, so neither the append nor a
+    // compaction swap can invalidate it
+    appendToVectorBandIndex(batch
       .join(result.filter(col("is_new")).select(col("vec_id")), "vec_id")
-      .join(s.read.parquet(indexPath).select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-    appendToVectorBandIndex(
-      accepted.select(col("vec_id"), col("embedding")), indexPath)
-    // conf-gated small-file compaction, as on the text side; `result` is
-    // already materialized, so the swap cannot invalidate it
-    IndexMaintenance.maybeCompact(s, indexPath)
+      .select(col("vec_id"), col("embedding")), indexPath)
     result
   }
 
@@ -785,7 +782,8 @@ object Similarity {
     * BY cell (one directory per coarse cell — the on-disk form of a
     * FAISS inverted list), centroids in a `_ivf_centroids` subdirectory
     * (underscore-prefixed, so a plain parquet read of the posting-list
-    * root ignores it — the same sidecar convention as `_lsh_geometry`).
+    * root ignores it — the same sidecar convention as the `_geometry`
+    * stamp, [[PersistedIndex.Ivf]]).
     * Train once, serve many: the quantizer runs here, never at query
     * time. */
   def writeIvfIndex(s: SparkSession, d: String, path: String): Unit =
@@ -803,10 +801,9 @@ object Similarity {
     // probe-cell literal filter lands on the RAW partition column (a
     // cast on the attribute would defeat directory pruning); cell ids
     // are seed vec_ids < cells by construction
-    top2.filter(col("crk") === 1)
+    PersistedIndex.Ivf.write(top2.filter(col("crk") === 1)
       .select(col("vec_id"), col("embedding"),
-        col("cent_id").cast("int").as("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+        col("cent_id").cast("int").as("cell")), path)
     // after the posting-list overwrite (which clears `path`), never before
     cents.write.mode("overwrite").parquet(path + "/_ivf_centroids")
   }
@@ -852,25 +849,32 @@ object Similarity {
   private[graft] def ivfProbesN(queries: DataFrame, indexPath: String,
       nprobe: Int): (DataFrame, Array[Int]) = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val s = queries.sparkSession
-    graft.functions.VectorFunctions.register(s)
-    import org.apache.spark.sql.expressions.Window
-    val cents = s.read.parquet(indexPath + "/_ivf_centroids")
-    val probes = queries
-      .select(col("vec_id"), col("embedding"),
-        col("embedding").cast("array<double>").as("emb_d"),
-        sqrt(expr("vec_dot(embedding, embedding)")).as("nrm"))
-      .join(broadcast(cents))
-      .withColumn("cs",
-        round(expr("vec_dot_d(emb_d, cvec)") / (col("nrm") * col("cnrm")), 6))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cent_id"))))
-      .filter(col("crk") <= nprobe)
+    PersistedIndex.Ivf.check(queries.sparkSession, indexPath)
+    val probes = nearestCells(queries, indexPath, nprobe)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
         col("nrm").as("qnrm"), col("cent_id").cast("int").as("cell"))
     val cells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0))
     (probes, cells)
+  }
+
+  /** Each (vec_id, embedding) row's `n` nearest STORED centroids,
+    * ranked `crk` — the probe of a query and the frozen-quantizer cell
+    * of an appended vector. */
+  private def nearestCells(vectors: DataFrame, indexPath: String, n: Int): DataFrame = {
+    val s = vectors.sparkSession
+    graft.functions.VectorFunctions.register(s)
+    import org.apache.spark.sql.expressions.Window
+    vectors
+      .select(col("vec_id"), col("embedding"),
+        col("embedding").cast("array<double>").as("emb_d"),
+        sqrt(expr("vec_dot(embedding, embedding)")).as("nrm"))
+      .join(broadcast(s.read.parquet(indexPath + "/_ivf_centroids")))
+      .withColumn("cs",
+        round(expr("vec_dot_d(emb_d, cvec)") / (col("nrm") * col("cnrm")), 6))
+      .withColumn("crk", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cent_id"))))
+      .filter(col("crk") <= n)
   }
 
   def knnFromIvfIndex(queries: DataFrame, indexPath: String): DataFrame = {
@@ -916,45 +920,18 @@ object Similarity {
     * embedding) batch to the STORED centroids — the quantizer is
     * frozen, the standard IVF ingest contract (FAISS `add` never
     * retrains; retraining is an offline rebuild) — and append the
-    * rows into their cell partitions. REPLAY-SAFE like the band-index
-    * growers: ids already present in the index are anti-joined out, so
-    * an at-least-once re-run of the same batch appends nothing.
-    * Per-cell small-file compaction is wired via
-    * [[IndexMaintenance.maybeCompactPartitioned]] (conf-gated, same
-    * `spark.graft.index.compactEvery` dial as the flat indexes). */
-  def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    graft.functions.VectorFunctions.register(s)
-    import org.apache.spark.sql.expressions.Window
-    val cents = s.read.parquet(path + "/_ivf_centroids")
-    val fresh = batch.join(
-      s.read.parquet(path).select(col("vec_id")).distinct(),
-      Seq("vec_id"), "left_anti")
-    fresh
-      .select(col("vec_id"), col("embedding"),
-        col("embedding").cast("array<double>").as("emb_d"),
-        sqrt(expr("vec_dot(embedding, embedding)")).as("nrm"))
-      .join(broadcast(cents))
-      .withColumn("cs",
-        round(expr("vec_dot_d(emb_d, cvec)") / (col("nrm") * col("cnrm")), 6))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cent_id"))))
-      .filter(col("crk") === 1)
-      .select(col("vec_id"), col("embedding"),
-        col("cent_id").cast("int").as("cell"))
-      .write.mode("append").partitionBy("cell").parquet(path)
-    // conf-gated per-cell small-file compaction — the partitioned twin
-    // of the flat band indexes' maybeCompact, same conf dial
-    IndexMaintenance.maybeCompactPartitioned(s, path)
-  }
+    * rows into their cell partitions, replay-safely
+    * ([[PersistedIndex.grow]]). */
+  def appendToIvfIndex(batch: DataFrame, path: String): Unit =
+    PersistedIndex.Ivf.grow(batch, path)(nearestCells(_, path, 1)
+      .select(col("vec_id"), col("embedding"), col("cent_id").cast("int").as("cell")))
 
   /** Catalog face: build the IVF index in a scratch directory, then
     * serve the standard 30-query batch from it — the train-once /
     * query-from-disk lifecycle, oracle-checked against the same SQL
     * replay as the in-query [[knnIvf]]. */
   def knnIvfIndexed(s: SparkSession, d: String): DataFrame = {
-    val path = graft.TempDirs.freshUnder("graft_ivfindex_",
-      graft.TempDirs.sessionKey(s, d), "ivf").toString
+    val path = PersistedIndex.Ivf.fresh(s, d, "ivf")
     writeIvfIndex(s, d, path)
     knnFromIvfIndex(
       embeddings(s, d).filter(col("vec_id") < 30)
@@ -963,22 +940,19 @@ object Similarity {
   }
 
   /** Build count of the served face — ServedFacesSpec pins build-once. */
-  private[graft] val servedBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def servedBuilds = PersistedIndex.Ivf.builds("served_ivf")
 
   /** Catalog face: the SERVE-ONLY cost of the IVF lifecycle — the
-    * production number ([[Retrieval.bm25BatchServed]]'s ANN twin).
-    * Builds [[writeIvfIndex]]'s table at most once per (session,
-    * dataset) behind a marker written only AFTER a completed build;
-    * every later invocation serves the 30-query batch from the warm
-    * cell-partitioned files, so bench's median (reps 2..n) IS the
-    * serving cost. Unlike the postings index, the trained quantizer
-    * DEPENDS on confs (`ivf.lloydIters`, `ivf.seeding`,
-    * `ivf.objectiveEps` — they shape the centroids, hence every posting
-    * list), so the marker fingerprint covers the embeddings table files
-    * PLUS those resolved conf values: a mid-session retune rebuilds
-    * instead of serving the other model's index. (`ivf.nprobe` is
-    * serve-time only — correctly absent.) Same oracle as `q_knn_ivf`,
-    * verbatim. */
+    * production number ([[Retrieval.bm25BatchServed]]'s ANN twin):
+    * [[writeIvfIndex]]'s table as a [[PersistedIndex.served]] artifact,
+    * so bench's median (reps 2..n) IS the serving cost. Unlike the
+    * postings index, the trained quantizer DEPENDS on confs
+    * (`ivf.lloydIters`, `ivf.seeding`, `ivf.objectiveEps`, `ivf.cells`
+    * — they shape the centroids, hence every posting list), so those
+    * resolved values ride the fingerprint: a mid-session retune
+    * rebuilds instead of serving the other model's index. (`ivf.nprobe`
+    * is serve-time only — correctly absent.) Same oracle as
+    * `q_knn_ivf`, verbatim. */
   def knnIvfServed(s: SparkSession, d: String): DataFrame =
     knnFromIvfIndex(
       embeddings(s, d).filter(col("vec_id") < 30)
@@ -989,18 +963,13 @@ object Similarity {
     * most once per (session, dataset, knobs). Factored out so the
     * smoke's recall phase can probe THE standing artifact the serve
     * ratios measure, instead of training a twin. */
-  private[graft] def servedIvfIndexPath(s: SparkSession, d: String): String = {
-    val fp = graft.Tables.filesFingerprint(s, d, "embeddings") +
-      s"|iters=${graft.GraftConf.int(s, "spark.graft.ivf.lloydIters", 1)}:" +
-      s"seed=${graft.GraftConf.get(s, "spark.graft.ivf.seeding").getOrElse("first")}:" +
-      s"eps=${graft.GraftConf.double(s, "spark.graft.ivf.objectiveEps", 0.0)}:" +
-      s"cells=${graft.GraftConf.int(s, "spark.graft.ivf.cells", 16)}"
-    val (idx, built) = graft.TempDirs.buildOnce("graft_ivfindex_",
-      graft.TempDirs.sessionKey(s, d), "served_ivf", fp)(p =>
-      writeIvfIndex(s, d, p.toString))
-    if (built) servedBuilds.incrementAndGet()
-    idx.toString
-  }
+  private[graft] def servedIvfIndexPath(s: SparkSession, d: String): String =
+    PersistedIndex.Ivf.served(s, d, "served_ivf",
+      s"iters=${graft.GraftConf.int(s, "spark.graft.ivf.lloydIters", 1)}:" +
+        s"seed=${graft.GraftConf.get(s, "spark.graft.ivf.seeding").getOrElse("first")}:" +
+        s"eps=${graft.GraftConf.double(s, "spark.graft.ivf.objectiveEps", 0.0)}:" +
+        s"cells=${graft.GraftConf.int(s, "spark.graft.ivf.cells", 16)}")(p =>
+      writeIvfIndex(s, d, p))
 
   /** Corpus-scaled cell count for [[knnIvfScaledServed]]:
     * k = max(16, ⌈√N⌉) — the FAISS sizing guidance (posting lists
@@ -1011,8 +980,7 @@ object Similarity {
 
   /** Build count of the scaled served face — ServedFacesSpec pins
     * build-once. */
-  private[graft] val scaledServedBuilds =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def scaledServedBuilds = PersistedIndex.Ivf.builds("served_ivf_scaled")
 
   /** Memoized ⌈√N⌉ cell count per (sessionKey, embeddings fingerprint)
     * — see [[knnIvfScaledServed]]. */
@@ -1068,22 +1036,18 @@ object Similarity {
     // signal this face exists to measure in ScaleSmoke. The fingerprint
     // covers the same file identity the buildOnce marker keys on, so a
     // changed corpus re-counts and a warm serve is count-free.
-    val baseFp = graft.Tables.filesFingerprint(s, d, "embeddings")
     // bound the memo (ADVICE r18: entries are tiny but accumulated for
     // the JVM's lifetime across sessions/corpora) — a long-lived
     // multi-tenant JVM resets the memo rather than growing it forever;
     // a reset only costs the next serve one column-pruned count
     if (scaledKCache.size > 4096) scaledKCache.clear()
     val k = scaledKCache.computeIfAbsent(
-      graft.TempDirs.sessionKey(s, d) + "|" + baseFp,
+      graft.TempDirs.sessionKey(s, d) + "|" +
+        graft.Tables.filesFingerprint(s, d, "embeddings"),
       _ => Integer.valueOf(scaledCellCount(embeddings(s, d).count()))).intValue
-    val fp = baseFp + s"|cells=$k"
-    val (idx, built) = graft.TempDirs.buildOnce("graft_ivfindex_",
-      graft.TempDirs.sessionKey(s, d), "served_ivf_scaled", fp)(p =>
-      writeIvfIndexModel(p.toString, ivfModel(s, d, lloydIters = 1,
+    PersistedIndex.Ivf.served(s, d, "served_ivf_scaled", s"cells=$k")(p =>
+      writeIvfIndexModel(p, ivfModel(s, d, lloydIters = 1,
         seeding = "first", objectiveEps = 0.0, cells = k)))
-    if (built) scaledServedBuilds.incrementAndGet()
-    idx.toString
   }
 
   /** SemDeDup-style SEMANTIC dedup: connected components over the

@@ -365,62 +365,32 @@ object TextAnalysis {
     * index statically. 64 mirrors [[Retrieval.IndexBuckets]]. */
   private[graft] val WinnowBuckets = 64
 
-  private def winnowBucketCol = pmod(col("fp"), lit(WinnowBuckets.toLong)).cast("int")
-
-  /** Fail-fast geometry check: an index winnowed at one (k, w) is
-    * meaningless to a probe selected at another — the fingerprints
-    * simply don't align. The `_winnow_meta` sidecar records the build
-    * geometry; every reader and appender verifies it against the
-    * session conf before touching the data. */
-  private def requireWinnowMeta(s: SparkSession, path: String): Unit = {
-    val k = graft.GraftConf.int(s, "spark.graft.winnow.gram", 5)
-    val w = graft.GraftConf.int(s, "spark.graft.winnow.window", 8)
-    val m = s.read.parquet(path + "/_winnow_meta").select(col("k"), col("w")).collect()(0)
-    require(m.getInt(0) == k && m.getInt(1) == w,
-      s"winnow index at $path was built with k=${m.getInt(0)}, w=${m.getInt(1)} " +
-        s"but the session confs (spark.graft.winnow.gram/.window) say k=$k, w=$w " +
-        "— rebuild the index or align the confs")
-  }
+  /** A winnow selection's index rows: the `fp % 64` bucket added. */
+  private def winnowRows(sel: DataFrame): DataFrame =
+    sel.withColumn("bucket", pmod(col("fp"), lit(WinnowBuckets.toLong)).cast("int"))
 
   /** Build the winnow-fingerprint index at `path`: the collapsed
     * (doc_id, fp, first_pos) selection, parquet PARTITIONED BY
     * `fp % 64` (probes prune to their fingerprints' buckets),
     * repartitioned so each bucket writes one file instead of one per
-    * task, plus the one-row `_winnow_meta` (k, w) geometry sidecar. */
+    * task, stamped with its (k, w) — an index winnowed at one (k, w) is
+    * meaningless to a probe selected at another ([[PersistedIndex
+    * .Winnow]]). */
   def writeWinnowIndex(s: SparkSession, d: String, path: String): Unit =
     writeWinnowIndexOf(docsW(s, d), path)
 
   /** [[writeWinnowIndex]] over any (doc_id, text) frame — the unit
     * [[winnowContaminationIndexed]] uses to index the train side only. */
-  def writeWinnowIndexOf(docs: DataFrame, path: String): Unit = {
-    val s = docs.sparkSession
-    val k = graft.GraftConf.int(s, "spark.graft.winnow.gram", 5)
-    val w = graft.GraftConf.int(s, "spark.graft.winnow.window", 8)
-    sideFps(winnowSelectedOf(s, docs))
-      .withColumn("bucket", winnowBucketCol)
-      .repartition(WinnowBuckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    s.range(1).select(lit(k).as("k"), lit(w).as("w"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/_winnow_meta")
-  }
+  def writeWinnowIndexOf(docs: DataFrame, path: String): Unit =
+    PersistedIndex.Winnow.write(
+      winnowRows(winnowSelectionOf(docs)).repartition(WinnowBuckets, col("bucket")),
+      path)
 
-  /** Index GROWTH, replay-safe under at-least-once delivery: already
-    * indexed doc_ids are anti-joined out (column-pruned read of the id
-    * column only), fresh docs winnow and append into their bucket
-    * partitions. Same grow-the-index contract as
-    * [[Retrieval.appendToPostingsIndex]], including the conf-gated
-    * per-bucket small-file compaction. */
-  def appendToWinnowIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    requireWinnowMeta(s, path)
-    val existing = s.read.parquet(path).select(col("doc_id")).distinct()
-    val fresh = batch.join(existing, Seq("doc_id"), "left_anti")
-    sideFps(winnowSelectedOf(s, fresh))
-      .withColumn("bucket", winnowBucketCol)
-      .repartition(col("bucket")) // one new file per bucket per batch
-      .write.mode("append").partitionBy("bucket").parquet(path)
-    IndexMaintenance.maybeCompactPartitioned(s, path)
-  }
+  /** Index GROWTH, replay-safe under at-least-once delivery
+    * ([[PersistedIndex.grow]]): already indexed doc_ids are skipped,
+    * fresh docs winnow and append into their bucket partitions. */
+  def appendToWinnowIndex(batch: DataFrame, path: String): Unit =
+    PersistedIndex.Winnow.grow(batch, path)(d => winnowRows(winnowSelectionOf(d)))
 
   /** Serve [[winnowContamination]] from a [[writeWinnowIndex]] table —
     * bit-equal by construction: the probe side winnows with the SAME
@@ -436,11 +406,11 @@ object TextAnalysis {
     * re-winnowed here — that is the whole point of the index. */
   def contaminationFromIndex(evalDocs: DataFrame, indexPath: String): DataFrame = {
     val s = evalDocs.sparkSession
-    requireWinnowMeta(s, indexPath)
+    PersistedIndex.Winnow.check(s, indexPath)
     val (minShared, cap) = winnowPairConfs(s)
     val e = graft.CacheScope.track(
       sideFps(winnowSelectedOf(s, evalDocs)).persist())
-    val buckets = e.select(winnowBucketCol.as("b")).distinct()
+    val buckets = winnowRows(e).select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq // ≤ 64 rows by construction
     val t = s.read.parquet(indexPath)
       .filter(col("bucket").isin(buckets: _*))
@@ -468,24 +438,18 @@ object TextAnalysis {
     *
     * Replay-safe under at-least-once foreachBatch: the report is a pure
     * function of (batch, evalSel) — a committed batch replays verbatim —
-    * and the append anti-joins doc_ids already in the index, so nothing
-    * regrows. The batch selection is lineage-truncated (computed once,
-    * not re-winnowed for report and append separately); the index
-    * geometry stamp is verified before anything runs. */
+    * and the append is [[PersistedIndex.grow]], so nothing regrows. The
+    * batch selection is lineage-truncated (computed once, not
+    * re-winnowed for report and append separately); the index geometry
+    * stamp is verified before anything runs. */
   def contaminationMonitorBatch(batch: DataFrame, evalSel: DataFrame,
       indexPath: String): DataFrame = {
     val s = batch.sparkSession
-    requireWinnowMeta(s, indexPath)
+    PersistedIndex.Winnow.check(s, indexPath)
     val (minShared, cap) = winnowPairConfs(s)
     val sel = Dedup.truncateLineage(winnowSelectionOf(batch))
     val report = contaminationPairs(evalSel, sel, minShared, cap)
-    val fresh = sel.join(
-      s.read.parquet(indexPath).select(col("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-    fresh.withColumn("bucket", winnowBucketCol)
-      .repartition(col("bucket")) // one new file per bucket per batch
-      .write.mode("append").partitionBy("bucket").parquet(indexPath)
-    IndexMaintenance.maybeCompactPartitioned(s, indexPath)
+    PersistedIndex.Winnow.grow(sel, indexPath)(winnowRows)
     report
   }
 
@@ -573,8 +537,7 @@ object TextAnalysis {
     * [[winnowContamination]] (the persisted hop must be invisible). */
   def winnowContaminationIndexed(s: SparkSession, d: String): DataFrame = {
     val evalMod = winnowEvalMod(s)
-    val path = graft.TempDirs.freshUnder("graft_winnowidx_",
-      graft.TempDirs.sessionKey(s, d), "train").toString
+    val path = PersistedIndex.Winnow.fresh(s, d, "train")
     val docs = docsW(s, d)
     writeWinnowIndexOf(docs.filter(col("doc_id") % evalMod =!= 0), path)
     contaminationFromIndex(
@@ -583,36 +546,23 @@ object TextAnalysis {
   }
 
   /** Build count of the served face — ServedFacesSpec pins build-once. */
-  private[graft] val servedBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def servedBuilds = PersistedIndex.Winnow.builds("served_train")
 
   /** Catalog face: the SERVE-ONLY cost of the winnow-index lifecycle
     * (the [[graft.operators.Retrieval.bm25BatchServed]] pattern, third
-    * index family). Builds the fingerprint index at most once per
-    * (session, dataset) behind a completed-build marker; bench's median
-    * (reps 2..n) is the pure probe cost. The index content depends on
-    * the documents files, the train slice (`winnow.evalMod`), AND the
-    * winnowing geometry (`winnow.gram`/`.window` — a different (k, w)
-    * selects different fingerprints), so all ride the marker
-    * fingerprint: a geometry retune REBUILDS here, where serving the
-    * stale files would instead fail fast on the `_winnow_meta` sidecar
-    * check — rebuild is the served face's contract, crash is the
-    * library primitive's. Serve-time dials (`minShared`,
-    * `maxDocsPerFp`) don't touch index content — correctly absent.
-    * Same oracle as `q_winnow_contamination`, verbatim. */
+    * index family), built by [[PersistedIndex.served]]; bench's median
+    * (reps 2..n) is the pure probe cost. The train slice
+    * (`winnow.evalMod`) rides the fingerprint beside the (k, w)
+    * geometry; serve-time dials (`minShared`, `maxDocsPerFp`) don't
+    * touch index content — correctly absent. Same oracle as
+    * `q_winnow_contamination`, verbatim. */
   def winnowContaminationServed(s: SparkSession, d: String): DataFrame = {
     val evalMod = winnowEvalMod(s)
-    val fp = graft.Tables.filesFingerprint(s, d, "documents") +
-      s"|evalMod=$evalMod" +
-      s":k=${graft.GraftConf.int(s, "spark.graft.winnow.gram", 5)}" +
-      s":w=${graft.GraftConf.int(s, "spark.graft.winnow.window", 8)}"
     val docs = docsW(s, d)
-    val (idx, built) = graft.TempDirs.buildOnce("graft_winnowidx_",
-      graft.TempDirs.sessionKey(s, d), "served_train", fp)(p =>
-      writeWinnowIndexOf(docs.filter(col("doc_id") % evalMod =!= 0), p.toString))
-    if (built) servedBuilds.incrementAndGet()
+    val idx = PersistedIndex.Winnow.served(s, d, "served_train", s"evalMod=$evalMod")(p =>
+      writeWinnowIndexOf(docs.filter(col("doc_id") % evalMod =!= 0), p))
     contaminationFromIndex(
-      docs.filter(col("doc_id") % evalMod === 0).select(col("doc_id"), col("text")),
-      idx.toString)
+      docs.filter(col("doc_id") % evalMod === 0).select(col("doc_id"), col("text")), idx)
   }
 
   /** Heavy hitters (tokens with ≥ 2% of all occurrences) via Count-Min

@@ -211,10 +211,9 @@ class SpanIndexSpec extends SparkFunSuite {
   test("geometry sidecar: serving fails fast when w disagrees") {
     val idx = scratch("graft_gramidx_meta_")
     Dedup.writeGramIndexOf(docs(sf).limit(5), idx)
-    // sabotage the sidecar to a different width
-    spark.range(1).selectExpr("CAST(7 AS INT) AS w")
-      .coalesce(1).write.mode("overwrite").parquet(idx + "/_gram_meta")
-    val e = intercept[IllegalArgumentException](
+    // sabotage the stamp to a different width
+    operators.PersistedIndex.Gram.writeStamp(spark, idx, "w=7 gh=xxh64")
+    val e = intercept[IllegalStateException](
       Dedup.spanRemovalFromIndex(docs(sf).limit(5), idx, minCut = 50))
     assert(e.getMessage.contains("w=7"))
   }

@@ -69,7 +69,7 @@ class WinnowIndexSpec extends SparkFunSuite {
     TextAnalysis.writeWinnowIndex(spark, sf, path)
     spark.conf.set("spark.graft.winnow.window", "4")
     try {
-      val e = intercept[IllegalArgumentException] {
+      val e = intercept[IllegalStateException] {
         TextAnalysis.contaminationFromIndex(
           Tables.documents(spark, sf).limit(1).select(col("doc_id"), col("text")), path)
       }
@@ -115,7 +115,8 @@ class WinnowIndexSpec extends SparkFunSuite {
     assert(idx.columns.toSet === Set("doc_id", "fp", "first_pos", "bucket"))
     assert(idx.groupBy(col("doc_id"), col("fp")).count()
       .filter(col("count") > 1).count() === 0, "index has duplicate (doc, fp) rows")
-    val meta = spark.read.parquet(path + "/_winnow_meta").collect()(0)
-    assert(meta.getAs[Int]("k") === 5 && meta.getAs[Int]("w") === 8)
+    val stamp = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, operators.PersistedIndex.StampName)), "UTF-8")
+    assert(stamp === "k=5 w=8")
   }
 }
